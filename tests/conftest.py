@@ -1,7 +1,12 @@
 from __future__ import annotations
 
+import datetime as dt
+import itertools
+import json
 import os
+import random
 import sys
+from dataclasses import dataclass
 
 import pytest
 
@@ -118,3 +123,71 @@ def spark():
 @pytest.fixture(scope="session")
 def sf_dir():
     return SF_DIR
+
+
+@dataclass
+class HfpFeed:
+    """A seeded HFP line file (FIXTURES.md A1) and its planted truth.
+    Each vehicle reports once a second; each report is one unique
+    (topic, payload), delivered once per feed, feed b trailing feed a by
+    up to 0.5 s.  Lines are in arrival order, stamped on arrival."""
+
+    path: str
+    lines: list[str]
+    keys: list[tuple[str, str]]  # (topic, payload) of each line
+
+    @property
+    def messages(self) -> int:
+        return len(self.lines)
+
+    @property
+    def uniques(self) -> set[tuple[str, str]]:
+        return set(self.keys)
+
+    def write(self, lines: list[str] | None = None, mode: str = "w") -> None:
+        with open(self.path, mode, encoding="utf-8") as f:
+            f.writelines(self.lines if lines is None else lines)
+
+
+def _iso(t: float) -> str:
+    return dt.datetime.fromtimestamp(t, dt.timezone.utc).strftime("%Y-%m-%dT%H:%M:%S.%f")
+
+
+@pytest.fixture
+def make_hfp_feed(tmp_path):
+    """``make_hfp_feed(name, seed, vehicles, seconds, feeds, pad)`` writes
+    a feed under ``tmp_path``; ``pad`` bytes of filler per payload make
+    a large file of few lines."""
+
+    def make(name="hfp.txt", seed=1, vehicles=12, seconds=25, feeds=2, pad=0) -> HfpFeed:
+        rng, t0, arrivals = random.Random(seed), 1539059572.0, []
+        for s, v in itertools.product(range(seconds), range(vehicles)):
+            event = t0 + s + v / vehicles
+            topic = (
+                f"/hfp/v1/journey/ongoing/bus/0018/{100 + v:05d}/1057/1/"
+                f"Munkkiniemi/07:32/{1471139 + s}/3/60;25/20/38/71"
+            )
+            vp = {"desi": "57", "veh": 100 + v, "tst": _iso(event)[:-3] + "Z",
+                  "lat": round(60.17 + rng.random() * 0.1, 6),
+                  "long": round(24.90 + rng.random() * 0.1, 6),
+                  "spd": round(rng.random() * 15, 2), **({"pad": "x" * pad} if pad else {})}
+            payload = json.dumps({"VP": vp}, separators=(",", ":"))
+            arrived = event + 0.05 + rng.random() * 0.25
+            for f in range(feeds):
+                arrivals.append((arrived + f * rng.random() * 0.5, topic, payload))
+        arrivals.sort()
+        feed = HfpFeed(
+            str(tmp_path / name),
+            [f"{_iso(a)}+0000 {topic} {payload}\n" for a, topic, payload in arrivals],
+            [(topic, payload) for _, topic, payload in arrivals],
+        )
+        feed.write()
+        return feed
+
+    return make
+
+
+@pytest.fixture
+def hfp_feed(make_hfp_feed) -> HfpFeed:
+    """The default two-feed file: 300 uniques, 600 lines."""
+    return make_hfp_feed()

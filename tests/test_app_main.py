@@ -1,28 +1,87 @@
 """The runnable application (`python -m transitdata_hfp_deduplicator_spark`)
 — Main.java's operational surface: config-driven source → dedup →
-forward → stats, end-to-end on the golden corpus."""
+forward, with per-window feed-health records, end-to-end on a seeded
+two-feed HFP file whose truth is planted (tests/conftest.py)."""
 
 from __future__ import annotations
 
+import json
+import os
 
-def test_app_drains_corpus_to_golden_uniques(spark, tmp_path, capsys):
+import pytest
+
+
+@pytest.fixture(autouse=True)
+def _one_window(monkeypatch):
+    # no window boundary can split a test's counts
+    monkeypatch.setenv("APPLICATION_ALERT_POLL_INTERVAL", "1 hour")
+
+
+def _run(capsys, source: str, out: str, ckpt: str) -> list[dict]:
     from transitdata_hfp_deduplicator_spark.__main__ import main
 
+    assert main(["--source", source, "--out", out, "--checkpoint", ckpt]) == 0
+    printed = capsys.readouterr().out.splitlines()
+    assert printed[-1].startswith("[done]")
+    return [json.loads(ln) for ln in printed if ln.startswith("{")]
+
+
+def _assert_forwarded_once(spark, out: str, feed) -> None:
+    keys = [(r.topic, r.payload) for r in spark.read.parquet(out).collect()]
+    assert len(keys) == len(feed.uniques)
+    assert set(keys) == feed.uniques
+
+
+def test_app_drains_fixture_to_planted_uniques(spark, tmp_path, capsys, hfp_feed):
+    out, ckpt = str(tmp_path / "out"), str(tmp_path / "ckpt")
+    records = _run(capsys, hfp_feed.path, out, ckpt)
+    assert {"server_ts", "topic", "payload"} <= set(spark.read.parquet(out).columns)
+    _assert_forwarded_once(spark, out, hfp_feed)
+    # one query, one checkpoint: no side-channel stats query
+    assert os.listdir(ckpt) == ["forward"]
+
+    (rec,) = records
+    assert (rec["messages"], rec["primes"], rec["duplicates"]) == (600, 300, 300)
+    assert (rec["dup_ratio"], rec["alert"]) == (1.0, None)
+    assert rec["window_start"] < rec["window_end"]
+
+
+def test_app_one_feed_raises_feed_down(spark, tmp_path, capsys, make_hfp_feed):
+    feed = make_hfp_feed("one_feed.txt", feeds=1)
+    records = _run(capsys, feed.path, str(tmp_path / "out"), str(tmp_path / "ckpt"))
+    assert [(r["primes"], r["duplicates"], r["alert"]) for r in records] == [
+        (feed.messages, 0, "FEED_DOWN")
+    ]
+
+
+def test_app_restart_forwards_no_duplicate_and_loses_no_unique(
+    spark, tmp_path, capsys, make_hfp_feed
+):
+    """Drain half the feed, append the rest, drain again on the same
+    checkpoint: the dedup state carries over the restart."""
+    feed = make_hfp_feed()
+    half = feed.messages // 2
+    first, second = set(feed.keys[:half]), set(feed.keys[half:])
+    # some uniques have a copy in each half
+    assert first & second
+    feed.write(feed.lines[:half])
+    out, ckpt = str(tmp_path / "out"), str(tmp_path / "ckpt")
+    (rec1,) = _run(capsys, feed.path, out, ckpt)
+    assert (rec1["messages"], rec1["primes"]) == (half, len(first))
+
+    feed.write(feed.lines[half:], mode="a")
+    (rec2,) = _run(capsys, feed.path, out, ckpt)
+    assert (rec2["messages"], rec2["primes"]) == (feed.messages - half, len(second - first))
+    _assert_forwarded_once(spark, out, feed)
+
+
+def test_app_drains_file_larger_than_one_batch(spark, tmp_path, capsys, make_hfp_feed):
+    """The source reads at most 64 MiB per micro-batch; draining must
+    go on until the whole file is forwarded."""
+    feed = make_hfp_feed("big.txt", vehicles=40, seconds=30, pad=32_000)
+    assert os.path.getsize(feed.path) > 64 << 20
     out = str(tmp_path / "out")
-    rc = main(
-        [
-            "--source",
-            "/root/reference/src/integration-test/resources/hfp-5000.txt",
-            "--out",
-            out,
-            "--checkpoint",
-            str(tmp_path / "ckpt"),
-        ]
-    )
-    assert rc == 0
-    got = spark.read.parquet(out)
-    assert got.count() == 4956  # ITDeduplicatorTest.java:92-93
-    # forwarded rows preserve the full envelope (server_ts/topic/payload)
-    assert {"server_ts", "topic", "payload", "digest"} <= set(got.columns)
-    printed = capsys.readouterr().out
-    assert "[stats]" in printed and "[done]" in printed
+    records = _run(capsys, feed.path, out, str(tmp_path / "ckpt"))
+    _assert_forwarded_once(spark, out, feed)
+    assert sum(r["messages"] for r in records) == feed.messages
+    assert sum(r["primes"] for r in records) == len(feed.uniques)

@@ -1,8 +1,12 @@
 """Custom Python DataSource (`format("hfp_text")`): split-boundary
-correctness against the column-expression parser, golden corpus parity.
+correctness against the column-expression parser, live tail and sink
+round trip on the seeded two-feed fixture (tests/conftest.py), and
+golden corpus parity where the reference corpus exists.
 """
 
 from __future__ import annotations
+
+import os
 
 import pytest
 
@@ -20,39 +24,47 @@ def _register(spark):
     spark.dataSource.register(HfpTextDataSource)
 
 
-def _load(spark, **opts):
-    r = spark.read.format("hfp_text").option("path", CORPUS)
+def _load(spark, path, **opts):
+    r = spark.read.format("hfp_text").option("path", path)
     for k, v in opts.items():
         r = r.option(k, v)
     return r.load()
 
 
-def test_reads_all_lines(spark):
-    assert _load(spark).count() == 5000
+def _keys(df) -> set[tuple[str, str]]:
+    return {(r.topic, r.payload) for r in df.select("topic", "payload").collect()}
 
 
-def test_matches_column_expression_parser(spark):
+def test_reads_all_lines(spark, hfp_feed):
+    assert _load(spark, hfp_feed.path).count() == hfp_feed.messages
+
+
+def test_matches_column_expression_parser(spark, hfp_feed):
     """The DataSource rows equal hfp.parse_lines' output exactly —
     two independent implementations of ITDeduplicatorTest.java:138-148."""
-    via_ds = set(map(tuple, _load(spark).collect()))
-    via_expr = set(map(tuple, read_corpus(spark, CORPUS).collect()))
+    via_ds = set(map(tuple, _load(spark, hfp_feed.path).collect()))
+    via_expr = set(map(tuple, read_corpus(spark, hfp_feed.path).collect()))
     assert via_ds == via_expr
+    assert len(via_ds) == hfp_feed.messages
 
 
 @pytest.mark.parametrize("n", [1, 3, 7, 32])
-def test_split_boundaries_lose_nothing(spark, n):
-    """Any byte-range split count yields the same 5000 rows — the
+def test_split_boundaries_lose_nothing(spark, hfp_feed, n):
+    """Any byte-range split count yields every line once — the
     partial-line ownership rule at work (a wrong rule drops or
     duplicates boundary lines)."""
-    df = _load(spark, numPartitions=str(n))
-    assert df.count() == 5000
+    df = _load(spark, hfp_feed.path, numPartitions=str(n))
+    assert df.count() == hfp_feed.messages
+    assert _keys(df) == hfp_feed.uniques
 
 
+@pytest.mark.skipif(not os.path.exists(CORPUS), reason="reference corpus absent")
 def test_golden_unique_count_through_datasource(spark):
     """The reference's golden oracle (5000 → 4956 uniques by
     topic + ' ' + payload, ITDeduplicatorTest.java:80-93) through the
     custom format."""
-    df = _load(spark)
+    df = _load(spark, CORPUS)
+    assert df.count() == 5000
     assert df.select("topic", "payload").distinct().count() == 4956
 
 
@@ -65,25 +77,22 @@ def test_parse_rule_degrades_gracefully():
     assert topic == "/a b c"
 
 
-def test_streaming_tail_ingests_live_appends(spark, tmp_path):
+def test_streaming_tail_ingests_live_appends(spark, hfp_feed, tmp_path):
     """`readStream.format("hfp_text")`: a live byte-offset tail of a
-    growing HFP feed — half the corpus at start, half appended while
-    the query runs; all 5000 messages arrive and the golden 4956-unique
-    invariant holds end-to-end.  The growing file stands in for the
-    growing broker topic (Deduplicator.java:43); the byte offset in the
-    checkpoint is the replayable consumer position."""
-    import os
+    growing HFP feed — half the lines at start, half appended while
+    the query runs; every message arrives and the planted uniques hold
+    end-to-end.  The growing file stands in for the growing broker
+    topic (Deduplicator.java:43); the byte offset in the checkpoint is
+    the replayable consumer position."""
     import time
 
-    corpus_lines = open(CORPUS, "rb").read().splitlines(keepends=True)
-    feed = str(tmp_path / "feed.txt")
-    with open(feed, "wb") as f:
-        f.write(b"".join(corpus_lines[:2500]))
+    half = hfp_feed.messages // 2
+    hfp_feed.write(hfp_feed.lines[:half])
     outd, ck = str(tmp_path / "out"), str(tmp_path / "ck")
     sdf = (
         spark.readStream.format("hfp_text")
-        .option("path", feed)
-        .option("batchBytes", str(256 * 1024))
+        .option("path", hfp_feed.path)
+        .option("batchBytes", str(16 * 1024))
         .load()
     )
     q = (
@@ -103,39 +112,36 @@ def test_streaming_tail_ingests_live_appends(spark, tmp_path):
 
     try:
         deadline = time.time() + 90
-        while _count() < 2500 and time.time() < deadline:
+        while _count() < half and time.time() < deadline:
             time.sleep(0.5)
-        assert _count() == 2500, "first half never fully ingested"
-        with open(feed, "ab") as f:
-            f.write(b"".join(corpus_lines[2500:]))
-        while _count() < 5000 and time.time() < deadline:
+        assert _count() == half, "first half never fully ingested"
+        hfp_feed.write(hfp_feed.lines[half:], mode="a")
+        while _count() < hfp_feed.messages and time.time() < deadline:
             time.sleep(0.5)
     finally:
         q.stop()
         q.awaitTermination()
     out = spark.read.parquet(outd)
-    assert out.count() == 5000
-    assert out.select("topic", "payload").distinct().count() == 4956
+    assert out.count() == hfp_feed.messages
+    assert _keys(out) == hfp_feed.uniques
 
 
-def test_sink_roundtrip_golden(spark, tmp_path):
+def test_sink_roundtrip(spark, hfp_feed, tmp_path):
     """Full loop through BOTH halves of the custom format: batch-read
-    the corpus via format('hfp_text') → first-wins dedup on
+    the feed via format('hfp_text') → first-wins dedup on
     (topic, payload) → stream the result into the hfp_text SINK
     (staged-file exactly-once commit) → re-read the sink output with
-    the same format → the golden 4,956 identities survive byte-exact.
+    the same format → the planted uniques survive byte-exact.
     This is the reference's consume → dedup → forward loop
     (Deduplicator.java:43-66,117-129) with the engine's own connector
     on both ends."""
-    import os
-
     from pyspark.sql import functions as F
 
     deduped = (
         spark.readStream.format("hfp_text")
-        .option("path", CORPUS)
+        .option("path", hfp_feed.path)
         # availableNow drains what one read() call reports available —
-        # size the micro-batch to cover the whole corpus
+        # size the micro-batch to cover the whole feed
         .option("batchBytes", str(1 << 25))
         .load()
         .groupBy("topic", "payload")
@@ -154,18 +160,9 @@ def test_sink_roundtrip_golden(spark, tmp_path):
     q.awaitTermination()
     batches = [d for d in os.listdir(out_dir) if d.startswith("batch=")]
     assert batches, "sink committed no batch directory"
-    back = (
-        spark.read.format("hfp_text")
-        .option("path", os.path.join(out_dir, sorted(batches)[-1]))
-        .load()
-    )
-    assert back.count() == 4956
-    want = set(
-        (r.topic, r.payload)
-        for r in _load(spark).select("topic", "payload").distinct().collect()
-    )
-    got = set((r.topic, r.payload) for r in back.collect())
-    assert got == want
+    back = _load(spark, os.path.join(out_dir, sorted(batches)[-1]))
+    assert back.count() == len(hfp_feed.uniques)
+    assert _keys(back) == hfp_feed.uniques
 
 
 def test_empty_file_yields_no_rows(spark, tmp_path):

@@ -1,0 +1,100 @@
+"""Feed-health windows of streaming/listener.py, driven by synthetic
+listener events on a fake clock: window closing, the termination flush,
+the alert bands and the A11 failure hook."""
+
+from __future__ import annotations
+
+from types import SimpleNamespace as NS
+
+import pytest
+
+from transitdata_hfp_deduplicator_spark.config import DedupConfig
+from transitdata_hfp_deduplicator_spark.streaming.listener import (
+    OBSERVATION,
+    DedupQueryListener,
+    interval_seconds,
+)
+
+T0 = 1_700_000_000.0
+
+
+def _listener(**cfg):
+    clock, records, failures = NS(t=T0), [], []
+    lst = DedupQueryListener(
+        DedupConfig(**{"poll_interval": "1 minute", **cfg}),
+        on_failure=lambda qid, exc: failures.append((qid, exc)),
+        emit=records.append,
+        clock=lambda: clock.t,
+    )
+    lst.onQueryStarted(NS(id="q"))
+    return lst, clock, records, failures
+
+
+def _progress(lst, clock, at, rows, primes, qid="q"):
+    clock.t = T0 + at
+    metrics = {} if primes is None else {OBSERVATION: {"primes": primes}}
+    lst.onQueryProgress(NS(progress=NS(id=qid, numInputRows=rows, observedMetrics=metrics)))
+
+
+def _counts(records):
+    keys = ("messages", "primes", "duplicates", "dup_ratio", "alert")
+    return [tuple(r[k] for k in keys) for r in records]
+
+
+def test_windows_close_on_first_event_after_their_end():
+    lst, clock, records, _ = _listener()
+    _progress(lst, clock, 10, rows=10, primes=5)
+    _progress(lst, clock, 50, rows=8, primes=4)
+    assert records == []
+    clock.t = T0 + 61
+    lst.onQueryIdle(NS(id="q"))
+    assert _counts(records) == [(18, 9, 9, 1.0, None)]
+    assert records[0]["window_start"] == "2023-11-14T22:13:20.000+00:00"
+    assert records[0]["window_end"] == "2023-11-14T22:14:20.000+00:00"
+
+    _progress(lst, clock, 70, rows=6, primes=6)
+    # the next event comes two windows later: the empty one is emitted too
+    _progress(lst, clock, 185, rows=4, primes=1)
+    assert _counts(records[1:]) == [(6, 6, 0, 0.0, "FEED_DOWN"), (0, 0, 0, None, None)]
+
+    clock.t = T0 + 190
+    assert not lst.terminated.is_set()
+    lst.onQueryTerminated(NS(id="q", exception=None))
+    assert lst.terminated.is_set()
+    # the open window is flushed, ending at the termination
+    assert _counts(records[3:]) == [(4, 1, 3, 3.0, "MORE_DUPLICATES_THAN_PRIMARIES")]
+    assert records[3]["window_end"] == "2023-11-14T22:16:30.000+00:00"
+
+
+@pytest.mark.parametrize("alert_on_threshold,alert", [(True, "FEED_DOWN"), (False, None)])
+def test_other_queries_and_unobserved_batches_are_ignored(alert_on_threshold, alert):
+    lst, clock, records, _ = _listener(alert_on_threshold=alert_on_threshold)
+    _progress(lst, clock, 1, rows=10, primes=5, qid="other")
+    _progress(lst, clock, 2, rows=7, primes=None)
+    _progress(lst, clock, 3, rows=2, primes=2)
+    lst.onQueryTerminated(NS(id="other", exception=None))
+    assert records == [] and not lst.terminated.is_set()
+    lst.onQueryTerminated(NS(id="q", exception=None))
+    assert _counts(records) == [(2, 2, 0, 0.0, alert)]
+
+
+def test_failure_flushes_then_fires_hook_once():
+    lst, clock, records, failures = _listener()
+    _progress(lst, clock, 5, rows=4, primes=2)
+    lst.onQueryTerminated(NS(id="q", exception="boom"))
+    assert _counts(records) == [(4, 2, 2, 1.0, None)]
+    assert failures == [("q", "boom")]
+    assert lst.terminated.is_set()
+
+
+@pytest.mark.parametrize(
+    "text,seconds",
+    [("1 minute", 60), ("1 minutes", 60), ("1 hour", 3600), ("500 milliseconds", 0.5),
+     ("", None), ("minute", None), ("1 fortnight", None), ("0 seconds", None)],
+)
+def test_interval_seconds(text, seconds):
+    if seconds is None:
+        with pytest.raises(ValueError):
+            interval_seconds(text)
+    else:
+        assert interval_seconds(text) == seconds

@@ -7,6 +7,7 @@ import datetime as dt
 import os
 import time
 
+import pytest
 from pyspark.sql import functions as F
 
 from transitdata_hfp_deduplicator_spark.operators.dedup import with_dup_rank
@@ -17,6 +18,7 @@ from transitdata_hfp_deduplicator_spark.streaming import (
     stream_dup_stats,
     with_alerts,
 )
+from transitdata_hfp_deduplicator_spark.streaming.analytics import alert_code
 
 
 def test_stream_dedup_events(spark, sf_dir):
@@ -85,6 +87,16 @@ def test_alert_predicates_bands(spark):
     assert out[0] is None
     assert out[1] == "MORE_DUPLICATES_THAN_PRIMARIES"
     assert out[2] == "FEED_DOWN"
+
+
+@pytest.mark.parametrize("alert_on_threshold", [True, False])
+@pytest.mark.parametrize("ratio", [None, 0.9699, 0.97, 1.0, 1.0001])
+def test_alert_code_agrees_with_with_alerts(spark, ratio, alert_on_threshold):
+    """The listener's plain-Python band and the column band are one
+    rule: they agree at every band edge."""
+    df = spark.createDataFrame([(ratio,)], "dup_ratio double")
+    (row,) = with_alerts(df, alert_on_threshold=alert_on_threshold).collect()
+    assert row.alert == alert_code(ratio, alert_on_threshold=alert_on_threshold)
 
 
 def _two_batch_replay(spark, tmp_path, batch0_rows, batch1_rows, schema):

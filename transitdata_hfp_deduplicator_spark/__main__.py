@@ -5,13 +5,18 @@ Deduplicator → blocking pump) as one runnable module:
     python -m transitdata_hfp_deduplicator_spark \
         --source /path/to/hfp-lines.txt --out /tmp/dedup_out
 
-Wires: source (`hfp_text` custom format — a file of ``ts topic json``
-lines, batch or tail-follow) → first-wins dedup on (topic, payload)
-identity → unique messages to a parquet sink (exactly-once via
-checkpoint) → tumbling duplicate-ratio stats with the reference's
-alert bands logged per window (Analytics.java:47-67).  All thresholds
-and the state TTL come from the same env-var surface the reference
-used (config.DedupConfig / environment.conf names).
+Runs ONE streaming query: source (`hfp_text` custom format — a file of
+``ts topic json`` lines) → first-wins dedup on (topic, payload)
+identity (`streaming.dedup_stream.stream_dedup`) → unique messages to a
+parquet sink (exactly-once via ``<checkpoint>/forward``).  The query
+observes its exact per-batch prime count, and `streaming.listener`
+folds it into processing-time ``APPLICATION_ALERT_POLL_INTERVAL``
+windows, printing one JSON feed-health record per window with the
+reference's alert bands (Analytics.java:47-67).  Without ``--follow``
+the app drains the file until it is caught up and exits; with it, it
+keeps tailing appended lines.  All thresholds and the state TTL come
+from the same env-var surface the reference used (config.DedupConfig /
+environment.conf names).
 """
 
 from __future__ import annotations
@@ -40,10 +45,16 @@ def main(argv: list[str] | None = None) -> int:
     from pyspark.sql import functions as F
 
     from transitdata_hfp_deduplicator_spark.config import DedupConfig
-    from transitdata_hfp_deduplicator_spark.operators.dedup import payload_digest
     from transitdata_hfp_deduplicator_spark.session import get_spark
     from transitdata_hfp_deduplicator_spark.sources.hfp_datasource import (
         HfpTextDataSource,
+    )
+    from transitdata_hfp_deduplicator_spark.streaming.dedup_stream import (
+        stream_dedup,
+    )
+    from transitdata_hfp_deduplicator_spark.streaming.listener import (
+        OBSERVATION,
+        DedupQueryListener,
     )
     from transitdata_hfp_deduplicator_spark.streaming.runner import ephemeral_dir
 
@@ -59,68 +70,34 @@ def main(argv: list[str] | None = None) -> int:
         # processing-time arrival stamp: the reference's only clock is
         # wall time (Deduplicator.java:51)
         .withColumn("arrived", F.current_timestamp())
-        .withColumn("digest", payload_digest("topic", "payload"))
     )
     ttl = f"{max(cfg.cache_ttl_ms // 1000, 1)} seconds"
-    uniques = parsed.withWatermark("arrived", ttl).dropDuplicatesWithinWatermark(
-        ["digest"]
+    uniques = stream_dedup(parsed, ["topic", "payload"], "arrived", ttl).observe(
+        OBSERVATION, F.count(F.lit(1)).alias("primes")
     )
 
     ckpt = args.checkpoint or ephemeral_dir("app_ckpt_")
-    fwd = (
-        uniques.writeStream.format("parquet")
-        .option("path", args.out)
-        .option("checkpointLocation", f"{ckpt}/forward")
-        .outputMode("append")
-    )
-    # stats branch: per-interval counts from the RAW stream + the unique
-    # count implied by first occurrences — the reference's ratio metric
-    stats = (
-        parsed.withWatermark("arrived", "10 minutes")
-        .groupBy(F.window("arrived", cfg.poll_interval))
-        .agg(
-            F.count(F.lit(1)).alias("messages"),
-            F.approx_count_distinct("digest").alias("approx_uniques"),
+    listener = DedupQueryListener(cfg)
+    spark.streams.addListener(listener)
+    q = None
+    try:
+        q = (
+            uniques.writeStream.format("parquet")
+            .option("path", args.out)
+            .option("checkpointLocation", f"{ckpt}/forward")
+            .outputMode("append")
+            .start()
         )
-    )
-
-    def log_stats(batch_df, batch_id: int) -> None:
-        for r in batch_df.collect():
-            # approx_count_distinct is the streaming-legal distinct (an
-            # exact streaming countDistinct is unsupported); its ±2%
-            # error can nudge dups negative on a no-duplicate feed —
-            # clamp, and read the ratio as an estimate (exact online
-            # metrics = the dedup_tag_stream operator, queries
-            # q_dup_stats_stream)
-            msgs, uniq = r.messages, min(max(r.approx_uniques, 1), r.messages)
-            dups = msgs - uniq
-            ratio = dups / uniq
-            line = (
-                f"[stats] window={r.window.start} messages={msgs} "
-                f"~uniques={uniq} dup_ratio={ratio:.3f}"
-            )
-            if ratio > 1.0:
-                line += " ALERT: more duplicates than primaries"
-            elif cfg.alert_on_threshold and ratio < cfg.duplicate_ratio_threshold - 1:
-                pass  # sub-threshold band only meaningful on redundant feeds
-            print(line, flush=True)
-
-    st = (
-        stats.writeStream.foreachBatch(log_stats)
-        .option("checkpointLocation", f"{ckpt}/stats")
-        .outputMode("update")
-    )
-
-    if args.follow:
-        q1 = fwd.start()
-        q2 = st.start()
-        q1.awaitTermination()
-        q2.stop()
-    else:
-        q1 = fwd.trigger(availableNow=True).start()
-        q1.awaitTermination()
-        q2 = st.trigger(availableNow=True).start()
-        q2.awaitTermination()
+        if args.follow:
+            q.awaitTermination()
+        else:
+            q.processAllAvailable()
+    finally:
+        if q is not None:
+            q.stop()
+            # the last window is flushed by the (asynchronous) terminated event
+            listener.terminated.wait(60)
+        spark.streams.removeListener(listener)
     n = spark.read.parquet(args.out).count()
     print(f"[done] unique messages forwarded: {n}", flush=True)
     return 0

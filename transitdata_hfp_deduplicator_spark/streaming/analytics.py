@@ -61,6 +61,24 @@ def stream_dup_stats(
     )
 
 
+MORE_DUPLICATES = "MORE_DUPLICATES_THAN_PRIMARIES"
+FEED_DOWN = "FEED_DOWN"
+
+
+def alert_code(
+    ratio: float | None,
+    ratio_threshold: float = DEFAULT_RATIO_THRESHOLD,
+    alert_on_threshold: bool = True,
+) -> str | None:
+    """``with_alerts``' band for one ratio, in plain Python; a None
+    ratio (no primes) raises nothing, as a NULL does there."""
+    if ratio is not None and ratio > 1.0:
+        return MORE_DUPLICATES
+    if ratio is not None and alert_on_threshold and ratio < ratio_threshold:
+        return FEED_DOWN
+    return None
+
+
 def with_alerts(
     stats: DataFrame,
     ratio_threshold: float = DEFAULT_RATIO_THRESHOLD,
@@ -72,8 +90,8 @@ def with_alerts(
     under = F.lit(alert_on_threshold) & (F.col("dup_ratio") < ratio_threshold)
     return stats.withColumn(
         "alert",
-        F.when(over, F.lit("MORE_DUPLICATES_THAN_PRIMARIES"))
-        .when(under, F.lit("FEED_DOWN"))
+        F.when(over, F.lit(MORE_DUPLICATES))
+        .when(under, F.lit(FEED_DOWN))
         .otherwise(F.lit(None).cast("string")),
     )
 

@@ -1,49 +1,128 @@
-"""Error-path handling — reference A11 (Deduplicator.java:61-65,
-Main.java:25-29): on a handler exception the reference flushes the
-stats once, logs, and tears the app down.
+"""Feed-health monitor and error path — the reference's analytics
+scheduler (Analytics.java:35-67) and A11 (Deduplicator.java:61-65,
+Main.java:25-29: on a handler exception, flush the stats once, log,
+tear down).
 
-Spark shape: a StreamingQueryListener observes every query; on a
-terminated-with-exception event it invokes a flush callback (last
-chance to emit/alert on the final stats) and records the failure.
-Progress events also surface per-batch row counts — the operational
-visibility the reference got from its scheduler logging.
+The forward query observes its exact per-batch prime count
+(``DataFrame.observe`` under ``OBSERVATION``), so the progress event
+carries ``primes`` and ``duplicates = numInputRows - primes`` with no
+extra job or query.  The listener folds them into tumbling
+processing-time windows anchored at its construction, like the
+reference's fixed-rate scheduler.  A window closes on the first
+progress or idle event after its end; the open window is flushed, up
+to that moment, when the query terminates.
 """
 
 from __future__ import annotations
 
+import datetime as dt
+import json
 import logging
+import threading
+import time
 from collections.abc import Callable
 
 from pyspark.sql.streaming import StreamingQueryListener
 
+from transitdata_hfp_deduplicator_spark.config import DedupConfig
+from transitdata_hfp_deduplicator_spark.streaming.analytics import alert_code
+
 logger = logging.getLogger(__name__)
+
+OBSERVATION = "dedup"  # name of the forward query's observed prime count
+
+_UNIT_S = {"millisecond": 1e-3, "second": 1.0, "minute": 60.0, "hour": 3600.0, "day": 86400.0}
+
+
+def interval_seconds(interval: str) -> float:
+    """Seconds in a ``"<n> <unit>"`` interval (``"1 minute"``, ``"1 minutes"``)."""
+    n, unit = interval.lower().split()
+    seconds = float(n) * _UNIT_S.get(unit.removesuffix("s"), 0.0)
+    if seconds <= 0:
+        raise ValueError(f"not a positive interval: {interval!r}")
+    return seconds
+
+
+def _iso(t: float) -> str:
+    return dt.datetime.fromtimestamp(t, dt.timezone.utc).isoformat(timespec="milliseconds")
+
+
+def _print_json(record: dict) -> None:
+    print(json.dumps(record), flush=True)
 
 
 class DedupQueryListener(StreamingQueryListener):
-    """Collects per-query progress and fires ``on_failure`` exactly once
-    when a query dies with an exception (the A11 flush hook)."""
+    """Emits one JSON feed-health record per ``cfg.poll_interval`` window
+    and calls ``on_failure`` once when a query dies with an exception.
+    Follows the queries started after it was added; ``terminated`` is
+    set once the last of them has ended and its window was flushed."""
 
-    def __init__(self, on_failure: Callable[[str, str], None] | None = None):
-        self.progress: dict[str, list] = {}
-        self.failures: dict[str, str] = {}
+    def __init__(
+        self,
+        cfg: DedupConfig | None = None,
+        on_failure: Callable[[str, str], None] | None = None,
+        emit: Callable[[dict], None] = _print_json,
+        clock: Callable[[], float] = time.time,
+    ):
+        self._cfg = cfg or DedupConfig()
+        self._window_s = interval_seconds(self._cfg.poll_interval)
+        self.terminated = threading.Event()
         self._on_failure = on_failure
+        self._emit = emit
+        self._clock = clock
+        self._queries: set[str] = set()
+        self._start, self._messages, self._primes = clock(), 0, 0
+
+    def _close(self, end: float) -> None:
+        primes, dups = self._primes, self._messages - self._primes
+        ratio = dups / primes if primes else None
+        cfg = self._cfg
+        self._emit(
+            {
+                "window_start": _iso(self._start),
+                "window_end": _iso(end),
+                "messages": self._messages,
+                "primes": primes,
+                "duplicates": dups,
+                "dup_ratio": ratio,
+                "alert": alert_code(ratio, cfg.duplicate_ratio_threshold, cfg.alert_on_threshold),
+            }
+        )
+        self._start, self._messages, self._primes = end, 0, 0
+
+    def _close_elapsed(self, now: float) -> None:
+        while now >= self._start + self._window_s:
+            self._close(self._start + self._window_s)
 
     def onQueryStarted(self, event) -> None:
-        self.progress.setdefault(str(event.id), [])
+        self._queries.add(str(event.id))
+        self.terminated.clear()
 
     def onQueryProgress(self, event) -> None:
         p = event.progress
-        self.progress.setdefault(str(p.id), []).append(
-            {"batchId": p.batchId, "numInputRows": p.numInputRows}
-        )
+        if str(p.id) not in self._queries:
+            return
+        self._close_elapsed(self._clock())
+        seen = (p.observedMetrics or {}).get(OBSERVATION)
+        if seen is not None:
+            self._messages += p.numInputRows
+            self._primes += seen["primes"]
 
     def onQueryIdle(self, event) -> None:
-        pass
+        if str(event.id) in self._queries:
+            self._close_elapsed(self._clock())
 
     def onQueryTerminated(self, event) -> None:
+        qid = str(event.id)
+        if qid not in self._queries:
+            return
+        self._queries.discard(qid)
+        now = self._clock()
+        self._close_elapsed(now)
+        self._close(now)
         if event.exception is not None:
-            qid = str(event.id)
-            self.failures[qid] = str(event.exception)
             logger.error("streaming query %s failed: %s", qid, event.exception)
             if self._on_failure:
                 self._on_failure(qid, str(event.exception))
+        if not self._queries:
+            self.terminated.set()
