@@ -76,8 +76,8 @@ def test_app_restart_forwards_no_duplicate_and_loses_no_unique(
 
 
 def test_app_drains_file_larger_than_one_batch(spark, tmp_path, capsys, make_hfp_feed):
-    """The source reads at most 64 MiB per micro-batch; draining must
-    go on until the whole file is forwarded."""
+    """A file over 64 MiB, the most one micro-batch once read, is
+    forwarded whole: the drain takes the backlog in one batch."""
     feed = make_hfp_feed("big.txt", vehicles=40, seconds=30, pad=32_000)
     assert os.path.getsize(feed.path) > 64 << 20
     out = str(tmp_path / "out")

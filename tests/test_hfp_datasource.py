@@ -13,6 +13,8 @@ import pytest
 from transitdata_hfp_deduplicator_spark.sources.hfp import read_corpus
 from transitdata_hfp_deduplicator_spark.sources.hfp_datasource import (
     HfpTextDataSource,
+    HfpTextStreamReader,
+    complete_end,
     parse_hfp_line,
 )
 
@@ -92,7 +94,6 @@ def test_streaming_tail_ingests_live_appends(spark, hfp_feed, tmp_path):
     sdf = (
         spark.readStream.format("hfp_text")
         .option("path", hfp_feed.path)
-        .option("batchBytes", str(16 * 1024))
         .load()
     )
     q = (
@@ -126,6 +127,84 @@ def test_streaming_tail_ingests_live_appends(spark, hfp_feed, tmp_path):
     assert _keys(out) == hfp_feed.uniques
 
 
+def _write_torn(feed, n: int) -> int:
+    """Write ``n`` whole lines of ``feed`` plus the first half of the
+    next one; returns the byte length of the whole lines."""
+    whole = "".join(feed.lines[:n])
+    torn = feed.lines[n]
+    with open(feed.path, "w", encoding="utf-8") as f:
+        f.write(whole + torn[: len(torn) // 2])
+    return len(whole.encode())
+
+
+def test_stream_reader_offsets_bound_whole_lines(hfp_feed):
+    """A stream batch ends after the last '\n': the torn last line is
+    left for the next batch, and replaying the committed range yields
+    the same rows."""
+    whole = _write_torn(hfp_feed, 2)
+    reader = HfpTextStreamReader({"path": hfp_feed.path})
+    rows, end = reader.read({"pos": 0})
+    expected = [parse_hfp_line(ln.rstrip("\n")) for ln in hfp_feed.lines[:2]]
+    assert (list(rows), end) == (expected, {"pos": whole})
+    assert list(reader.readBetweenOffsets({"pos": 0}, end)) == expected
+    rows, again = reader.read(end)
+    assert (list(rows), again) == ([], end)
+
+    with open(hfp_feed.path, "a", encoding="utf-8") as f:
+        f.write(hfp_feed.lines[2][len(hfp_feed.lines[2]) // 2 :])
+    rows, end3 = reader.read(end)
+    assert list(rows) == [parse_hfp_line(hfp_feed.lines[2].rstrip("\n"))]
+    assert end3 == {"pos": os.path.getsize(hfp_feed.path)}
+
+
+def test_complete_end_scans_back_across_chunks(tmp_path):
+    p = tmp_path / "lines.txt"
+    p.write_bytes(b"a {}\n" + b"x" * 200_000)  # torn tail over 3 read chunks
+    assert complete_end(str(p), 0) == 5
+    assert complete_end(str(p), 5) == 5  # nothing complete after 5
+    p.write_bytes(b"")
+    assert complete_end(str(p), 0) == 0
+
+
+def test_stream_forwards_line_torn_by_append_whole(spark, hfp_feed, tmp_path):
+    """Two lines plus half a third, then the rest of the third: exactly
+    three rows, none of them split (a read that stops at the file size
+    would emit the halves as two corrupt rows)."""
+    _write_torn(hfp_feed, 2)
+    q = (
+        spark.readStream.format("hfp_text")
+        .option("path", hfp_feed.path)
+        .load()
+        .writeStream.format("memory")
+        .queryName("torn_line")
+        .option("checkpointLocation", str(tmp_path / "ck"))
+        .start()
+    )
+    try:
+        q.processAllAvailable()
+        with open(hfp_feed.path, "a", encoding="utf-8") as f:
+            f.write(hfp_feed.lines[2][len(hfp_feed.lines[2]) // 2 :])
+        q.processAllAvailable()
+    finally:
+        q.stop()
+    got = sorted(map(tuple, spark.table("torn_line").collect()))
+    assert got == sorted(parse_hfp_line(ln.rstrip("\n")) for ln in hfp_feed.lines[:3])
+
+
+def test_run_to_memory_drains_stream_over_1mib(spark, make_hfp_feed):
+    """An availableNow run asks the source for one latest offset, so
+    that offset has to cover the whole backlog."""
+    from transitdata_hfp_deduplicator_spark.streaming.runner import run_to_memory
+
+    feed = make_hfp_feed("big.txt", pad=4_000)
+    assert os.path.getsize(feed.path) > 1 << 20
+    out = run_to_memory(
+        spark.readStream.format("hfp_text").option("path", feed.path).load()
+    )
+    assert out.count() == feed.messages
+    assert _keys(out) == feed.uniques
+
+
 def test_sink_roundtrip(spark, hfp_feed, tmp_path):
     """Full loop through BOTH halves of the custom format: batch-read
     the feed via format('hfp_text') → first-wins dedup on
@@ -140,9 +219,6 @@ def test_sink_roundtrip(spark, hfp_feed, tmp_path):
     deduped = (
         spark.readStream.format("hfp_text")
         .option("path", hfp_feed.path)
-        # availableNow drains what one read() call reports available —
-        # size the micro-batch to cover the whole feed
-        .option("batchBytes", str(1 << 25))
         .load()
         .groupBy("topic", "payload")
         .agg(F.min("server_ts").alias("server_ts"))

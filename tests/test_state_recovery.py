@@ -77,32 +77,19 @@ def test_dedup_state_survives_restart(spark, tmp_path):
     )
 
 
-def test_dedup_on_rocksdb_state_store(tmp_path):
+def test_dedup_on_rocksdb_state_store(spark, tmp_path):
     """Full dedup run on the RocksDB provider (disk-backed state — the
     backend that holds 100 TB-scale key sets without executor OOM)."""
-    from transitdata_hfp_deduplicator_spark.session import get_spark
+    from transitdata_hfp_deduplicator_spark.streaming.runner import scoped_conf
 
-    spark = get_spark(
-        "rocksdb-test",
-        cpus=4,
-        shuffle_partitions=4,
-        extra_conf={
-            "spark.sql.streaming.stateStore.providerClass": (
-                "org.apache.spark.sql.execution.streaming.state."
-                "RocksDBStateStoreProvider"
-            )
-        },
-    )
-    # getOrCreate may return the shared session with the conf applied at
-    # runtime — restore it afterwards so later tests keep the default
     key = "spark.sql.streaming.stateStore.providerClass"
-    assert "RocksDB" in spark.conf.get(key)
-    try:
+    rocksdb = "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider"
+    with scoped_conf(spark, key, rocksdb):
         base = dt.datetime(2024, 1, 1, 12, 0, 0)
         src, ckpt = str(tmp_path / "src"), str(tmp_path / "ckpt")
         rows = [(f"k{i % 50}", base + dt.timedelta(seconds=i)) for i in range(500)]
         _write_batch(spark, src, rows)
         out = _run_available(spark, src, ckpt, str(tmp_path / "rocks_out"))
         assert out.count() == 50  # 500 rows -> 50 unique keys
-    finally:
-        spark.conf.unset(key)
+        # the provider is recorded in the checkpoint: the run used RocksDB
+        assert "RocksDB" in open(os.path.join(ckpt, "offsets", "0")).read()

@@ -14,7 +14,8 @@ folds it into processing-time ``APPLICATION_ALERT_POLL_INTERVAL``
 windows, printing one JSON feed-health record per window with the
 reference's alert bands (Analytics.java:47-67).  Without ``--follow``
 the app drains the file until it is caught up and exits; with it, it
-keeps tailing appended lines.  All thresholds and the state TTL come
+keeps tailing appended lines.  A last line without its newline yet is
+held back until the newline is written.  All thresholds and the state TTL come
 from the same env-var surface the reference used (config.DedupConfig /
 environment.conf names).
 """
@@ -65,7 +66,6 @@ def main(argv: list[str] | None = None) -> int:
     parsed = (
         spark.readStream.format("hfp_text")
         .option("path", args.source)
-        .option("batchBytes", str(64 << 20))
         .load()
         # processing-time arrival stamp: the reference's only clock is
         # wall time (Deduplicator.java:51)

@@ -41,6 +41,12 @@ def get_spark(
     shuffle_partitions: int | None = None,
     extra_conf: dict[str, str] | None = None,
 ) -> SparkSession:
+    """Build the engine's session; an already active session is
+    returned untouched, so a caller never rewrites another's confs
+    (scope a per-call conf with ``streaming.runner.scoped_conf``)."""
+    active = SparkSession.getActiveSession()
+    if active is not None:
+        return active
     cpus = cpus or default_parallelism()
     shuffle_partitions = shuffle_partitions or cpus
     builder = (

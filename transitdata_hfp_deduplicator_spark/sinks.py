@@ -12,10 +12,6 @@ package the idiomatic patterns:
   as a ``foreachBatch`` consumer: per-batch alert rows are handed to a
   callback (log/pager/topic producer) with the batch id for idempotent
   delivery.
-* ``envelope_to_kafka_columns`` — maps the engine's message envelope
-  back to the Kafka/Pulsar sink column contract (key/value/headers), so
-  a broker sink is one ``.format("kafka")`` away; no broker ships in
-  this environment, so the format call itself stays with the caller.
 """
 
 from __future__ import annotations
@@ -34,12 +30,11 @@ def write_stream_parquet(
     sdf: DataFrame,
     path: str,
     checkpoint: str | None = None,
-    trigger_available_now: bool = True,
 ) -> StreamingQuery:
     """Checkpointed streaming parquet append (exactly-once: the
     checkpoint records committed epochs; replays after failure rewrite
     the same files)."""
-    writer = (
+    return (
         sdf.writeStream.format("parquet")
         .option("path", path)
         .option(
@@ -47,10 +42,9 @@ def write_stream_parquet(
             checkpoint or ephemeral_dir("sink_ckpt_"),
         )
         .outputMode("append")
+        .trigger(availableNow=True)
+        .start()
     )
-    if trigger_available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
 
 
 def alert_sink(
@@ -114,17 +108,3 @@ def write_bucketed(
         writer = writer.sortBy(*sort_cols)
     writer.saveAsTable(table)
 
-
-def envelope_to_kafka_columns(df: DataFrame) -> DataFrame:
-    """Envelope (key, value, event_time, properties) → Kafka sink
-    columns: key/value binary + headers array<struct<key,value>>.
-    The reference preserves exactly these fields on forward
-    (Deduplicator.java:117-123)."""
-    return df.select(
-        F.col("key").cast("binary").alias("key"),
-        F.col("value").cast("binary").alias("value"),
-        F.expr(
-            "transform(map_entries(properties),"
-            " e -> struct(e.key as key, cast(e.value as binary) as value))"
-        ).alias("headers"),
-    )

@@ -8,10 +8,12 @@ topics may contain spaces).
 This is the engine's "own connector" surface: where `sources/broker.py`
 maps an EXISTING source's columns, this registers a NEW format with the
 planner.  Splits are byte ranges with the Hadoop text-input boundary
-rule (a partition owns the lines that START inside its range; the first
-partial line belongs to the predecessor), so parallelism scales with
-file size and no central line index is needed — the same contract that
-lets a 1000-executor cluster scan a 100 TB text dump.
+rule (a range owns the lines that START inside it; the first partial
+line belongs to the predecessor), so parallelism scales with file size
+and no central line index is needed — the same contract that lets a
+1000-executor cluster scan a 100 TB text dump.  The stream reader uses
+the same rule from its offset to the byte after the file's last
+newline, so its offsets always bound whole lines.
 """
 
 from __future__ import annotations
@@ -50,6 +52,43 @@ def parse_hfp_line(line: str) -> tuple[str, str, str]:
     return line[:sp], line[sp + 1 : brace].strip(), line[brace:]
 
 
+def read_lines(path: str, start: int, end: int) -> Iterator[tuple]:
+    """Parsed rows of the lines that start in ``[start, end)``.
+
+    Boundary rule: discard the line containing byte ``start - 1``; if
+    that byte is a newline the discarded chunk is exactly the predecessor's
+    final line, so the line starting AT ``start`` survives.  The last
+    owned line is read to its end even past ``end``."""
+    with open(path, "rb") as f:
+        if start > 0:
+            f.seek(start - 1)
+            f.readline()
+        pos = f.tell()
+        for raw in f:
+            if pos >= end:
+                break
+            pos += len(raw)
+            line = raw.decode("utf-8", errors="replace").rstrip("\r\n")
+            if line:
+                yield parse_hfp_line(line)
+
+
+def complete_end(path: str, start: int) -> int:
+    """The byte after the file's last newline at or after ``start``, or
+    ``start`` when no line after it is complete yet: an append still
+    in flight stays unread until its newline lands."""
+    with open(path, "rb") as f:
+        hi = f.seek(0, os.SEEK_END)
+        while hi > start:
+            lo = max(start, hi - (64 << 10))
+            f.seek(lo)
+            nl = f.read(hi - lo).rfind(b"\n")
+            if nl >= 0:
+                return lo + nl + 1
+            hi = lo
+    return start
+
+
 class HfpTextReader(DataSourceReader):
     def __init__(self, options):
         self.path = options.get("path")
@@ -81,73 +120,39 @@ class HfpTextReader(DataSourceReader):
         return parts
 
     def read(self, partition: HfpByteRange) -> Iterator[tuple]:
-        with open(partition.path, "rb") as f:
-            if partition.start > 0:
-                # boundary rule: discard the line containing byte
-                # start-1; if that byte is '\n' the discarded chunk is
-                # exactly the predecessor's final line, so the line
-                # starting AT `start` survives.
-                f.seek(partition.start - 1)
-                f.readline()
-            while True:
-                pos = f.tell()
-                if pos >= partition.end:
-                    break
-                raw = f.readline()
-                if not raw:
-                    break
-                line = raw.decode("utf-8", errors="replace").rstrip("\r\n")
-                if line:
-                    yield parse_hfp_line(line)
+        return read_lines(partition.path, partition.start, partition.end)
 
 
 class HfpTextStreamReader(SimpleDataSourceStreamReader):
     """Tail-like streaming ingest of an HFP line file: the offset is a
-    BYTE position; each micro-batch reads up to ``batchBytes`` new
-    bytes extended to the next line boundary.  ``readBetweenOffsets``
+    BYTE position at a line start.  Each micro-batch takes every
+    complete line from the last offset to the byte after the file's
+    last newline — the whole backlog, since an ``availableNow`` run asks
+    for one latest offset and stops there.  ``readBetweenOffsets``
     replays any committed range deterministically (exactly the
     replayability contract a broker offset gives the checkpoint) — this
     is the engine's live-feed analog of the reference's Pulsar consumer
     (Deduplicator.java:43), growing file standing in for growing topic.
+    The read runs on the driver; bulk files go through the
+    split-parallel batch reader instead.
     """
 
     def __init__(self, options):
         self.path = options.get("path")
         if not self.path:
             raise ValueError("hfp_text requires .option('path', ...)")
-        self.batch_bytes = int(options.get("batchBytes", str(1 << 20)))
 
     def initialOffset(self) -> dict:
         return {"pos": 0}
 
     def read(self, start: dict) -> tuple[Iterator[tuple], dict]:
         pos = int(start["pos"])
-        size = os.path.getsize(self.path)
-        if pos >= size:
-            return iter(()), {"pos": pos}
-        with open(self.path, "rb") as f:
-            f.seek(pos)
-            rows, limit = [], min(pos + self.batch_bytes, size)
-            while f.tell() < limit:
-                raw = f.readline()
-                if not raw:
-                    break
-                line = raw.decode("utf-8", errors="replace").rstrip("\r\n")
-                if line:
-                    rows.append(parse_hfp_line(line))
-            end = f.tell()
-        return iter(rows), {"pos": end}
+        end = complete_end(self.path, pos)
+        # a list: Spark's prefetch cache copies the iterator
+        return iter(list(read_lines(self.path, pos, end))), {"pos": end}
 
     def readBetweenOffsets(self, start: dict, end: dict) -> Iterator[tuple]:
-        with open(self.path, "rb") as f:
-            f.seek(int(start["pos"]))
-            while f.tell() < int(end["pos"]):
-                raw = f.readline()
-                if not raw:
-                    break
-                line = raw.decode("utf-8", errors="replace").rstrip("\r\n")
-                if line:
-                    yield parse_hfp_line(line)
+        return read_lines(self.path, int(start["pos"]), int(end["pos"]))
 
     def commit(self, end: dict) -> None:
         pass  # nothing to release; the file is the retention
