@@ -37,7 +37,6 @@ SLOW_FILES = {
     "test_hfp_datasource.py",
     "test_lru_state.py",
     "test_neardup_stream.py",
-    "test_pipeline.py",
     "test_state_recovery.py",
     "test_stateful.py",
     "test_streaming.py",
@@ -61,6 +60,9 @@ SLOW_TESTS = {
     "test_clusters.py::test_large_small_star_deep_chain",
     "test_clusters.py::test_distributed_path_matches_unionfind",
     "test_sources.py::test_socket_replay_golden",
+    "test_sources.py::test_stream_dedup_canonicalizes_typed_payloads",
+    "test_listener.py::test_listener_captures_failure",
+    "test_similarity.py::test_exploded_shingles_match_plain_explode",
     "test_pq.py::test_ivfadc_shortlist_restricted_to_probed_cells",
     "test_pq.py::test_ivfadc_query_self_recall",
     "test_pq.py::test_rerank_is_exact_within_shortlist",
@@ -69,7 +71,6 @@ SLOW_TESTS = {
     "test_bpe.py::test_train_merges_matches_sequential_reference",
     "test_bloom.py::test_no_false_negatives",
     "test_scale_patterns.py::test_streaming_parquet_sink_exactly_once",
-    "test_scale_patterns.py::test_alert_sink_callback",
     "test_plans.py::test_embed_ann_ivfpq_codes_join_cell_pruned",
     "test_plans.py::test_similarity_pair_joins_no_cartesian",
     "test_plans.py::test_embed_ann_pq_raw_vectors_never_shuffled",
@@ -97,8 +98,9 @@ def pytest_collection_modifyitems(config, items):
     # Match on originalname (the bare function name), not item.name:
     # a later-parametrized test's ids become name[param] and would
     # silently drop out of the slow tier into the fast pre-commit run
-    # (ADVICE r9).  Every SLOW_TESTS entry must match at least one
-    # collected item so a renamed/deleted test can't leave a stale row.
+    # (ADVICE r9).  Every SLOW_FILES and SLOW_TESTS entry must match at
+    # least one collected item so a renamed/deleted test or file can't
+    # leave a stale row.
     matched: set[str] = set()
     for item in items:
         fname = os.path.basename(str(item.fspath))
@@ -112,6 +114,8 @@ def pytest_collection_modifyitems(config, items):
     if len(items) > 200:
         stale = SLOW_TESTS - matched
         assert not stale, f"SLOW_TESTS entries matched no collected test: {stale}"
+        stale = SLOW_FILES - {key.split("::", 1)[0] for key in matched}
+        assert not stale, f"SLOW_FILES entries matched no collected test: {stale}"
 
 
 @pytest.fixture(scope="session")

@@ -10,6 +10,8 @@ import os
 
 import pytest
 
+from tests.test_hfp import CORPUS
+
 
 @pytest.fixture(autouse=True)
 def _one_window(monkeypatch):
@@ -85,3 +87,14 @@ def test_app_drains_file_larger_than_one_batch(spark, tmp_path, capsys, make_hfp
     _assert_forwarded_once(spark, out, feed)
     assert sum(r["messages"] for r in records) == feed.messages
     assert sum(r["primes"] for r in records) == len(feed.uniques)
+
+
+@pytest.mark.skipif(not os.path.exists(CORPUS), reason="reference corpus absent")
+def test_app_golden_corpus(spark, tmp_path, capsys):
+    """Reference parity on the one wiring: the reference's 5,000-message
+    corpus forwards 4,956 uniques (ITDeduplicatorTest.java:92-93), and
+    its 44 duplicates (ratio 44/4,956, far below 0.97) read FEED_DOWN."""
+    out = str(tmp_path / "out")
+    (rec,) = _run(capsys, CORPUS, out, str(tmp_path / "ckpt"))
+    assert spark.read.parquet(out).count() == 4956
+    assert (rec["messages"], rec["primes"], rec["alert"]) == (5000, 4956, "FEED_DOWN")

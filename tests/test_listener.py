@@ -1,6 +1,7 @@
 """Feed-health windows of streaming/listener.py, driven by synthetic
 listener events on a fake clock: window closing, the termination flush,
-the alert bands and the A11 failure hook."""
+the alert band and the A11 failure hook — plus the config it reads and
+one real query whose batch raises."""
 
 from __future__ import annotations
 
@@ -10,8 +11,11 @@ import pytest
 
 from transitdata_hfp_deduplicator_spark.config import DedupConfig
 from transitdata_hfp_deduplicator_spark.streaming.listener import (
+    FEED_DOWN,
+    MORE_DUPLICATES,
     OBSERVATION,
     DedupQueryListener,
+    alert_code,
     interval_seconds,
 )
 
@@ -98,3 +102,62 @@ def test_interval_seconds(text, seconds):
             interval_seconds(text)
     else:
         assert interval_seconds(text) == seconds
+
+
+def test_config_defaults_and_env_override(monkeypatch):
+    cfg = DedupConfig()
+    assert cfg.cache_ttl_ms == 4 * 3600 * 1000  # environment.conf:24
+    assert cfg.duplicate_ratio_threshold == 0.97  # environment.conf:29
+    monkeypatch.setenv("APPLICATION_CACHE_TTL_SECONDS", "60")
+    monkeypatch.setenv("APPLICATION_ALERT_RATIO_THRESHOLD", "0.5")
+    cfg2 = DedupConfig()
+    assert cfg2.cache_ttl_ms == 60_000
+    assert cfg2.duplicate_ratio_threshold == 0.5
+
+
+# ratio -> (alert with alert_on_threshold, alert without), at the
+# default threshold 0.97; both edges are exclusive
+BAND = {
+    None: (None, None),
+    0.5: (FEED_DOWN, None),
+    0.9699: (FEED_DOWN, None),
+    0.97: (None, None),
+    1.0: (None, None),
+    1.0001: (MORE_DUPLICATES, MORE_DUPLICATES),
+    1.01: (MORE_DUPLICATES, MORE_DUPLICATES),
+}
+
+
+@pytest.mark.parametrize("alert_on_threshold", [True, False])
+@pytest.mark.parametrize("ratio", list(BAND))
+def test_alert_code_band(ratio, alert_on_threshold):
+    on, off = BAND[ratio]
+    assert alert_code(ratio, 0.97, alert_on_threshold) == (on if alert_on_threshold else off)
+
+
+def test_listener_captures_failure(spark, tmp_path):
+    """A real query whose foreachBatch raises reaches the failure hook."""
+    failures = []
+    listener = DedupQueryListener(on_failure=lambda qid, exc: failures.append(exc))
+    spark.streams.addListener(listener)
+    try:
+        src = str(tmp_path / "src")
+        spark.createDataFrame([(1, "x")], "id long, s string").write.parquet(src)
+        stream = spark.readStream.schema("id long, s string").parquet(src)
+
+        def explode_in_batch(df, _):
+            raise RuntimeError("boom")
+
+        q = (
+            stream.writeStream.foreachBatch(explode_in_batch)
+            .option("checkpointLocation", str(tmp_path / "ckpt"))
+            .trigger(availableNow=True)
+            .start()
+        )
+        with pytest.raises(Exception):
+            q.awaitTermination()
+        # listener events are asynchronous
+        assert listener.terminated.wait(10)
+        assert failures and "boom" in failures[0]
+    finally:
+        spark.streams.removeListener(listener)

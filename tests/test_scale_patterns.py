@@ -95,34 +95,6 @@ def test_streaming_parquet_sink_exactly_once(spark, sf_dir, tmp_path):
     assert n1 == expected
 
 
-def test_alert_sink_callback(spark, tmp_path):
-    from transitdata_hfp_deduplicator_spark.streaming import parquet_stream
-    from transitdata_hfp_deduplicator_spark.streaming.analytics import (
-        stream_dup_stats,
-        with_alerts,
-    )
-    from transitdata_hfp_deduplicator_spark.sinks import alert_sink
-    import datetime as dt
-
-    base = dt.datetime(2024, 1, 1, 12, 0, 0)
-    rows = [(base + dt.timedelta(seconds=i), i % 3 == 0, None) for i in range(30)]
-    src = str(tmp_path / "tagged")
-    spark.createDataFrame(
-        rows, "ts timestamp, is_prime boolean, delay_ms long"
-    ).coalesce(1).write.parquet(src)
-
-    received = []
-    stats = with_alerts(
-        stream_dup_stats(parquet_stream(spark, src), window_duration="1 hour")
-    )
-    q = alert_sink(stats, lambda alerts, bid: received.append((bid, alerts)))
-    q.awaitTermination()
-    # 10 primes / 20 duplicates -> ratio 2.0 -> MORE_DUPLICATES alert
-    assert received, "alert callback must fire"
-    kinds = {a.alert for _, alerts in received for a in alerts}
-    assert kinds == {"MORE_DUPLICATES_THAN_PRIMARIES"}
-
-
 def test_incremental_dedup_over_bucketed_index_is_shuffle_free(spark, sf_dir):
     """The production layout for q_dedup_incremental: the historical
     digest index and today's batch both bucketed on the digest — the

@@ -4,9 +4,12 @@ operators without a measured recall are not 'done'."""
 
 from __future__ import annotations
 
+import pytest
 from pyspark.sql import functions as F
 
 from transitdata_hfp_deduplicator_spark.operators.similarity import (
+    _exploded_shingles,
+    _shingled,
     cosine_topk,
     ivf_topk,
     jaccard_pairs,
@@ -15,6 +18,28 @@ from transitdata_hfp_deduplicator_spark.operators.similarity import (
     simhash_pairs,
 )
 from transitdata_hfp_deduplicator_spark.tables import table
+
+
+@pytest.mark.parametrize("with_size", [False, True])
+@pytest.mark.parametrize("shingle_n", [1, 3])
+def test_exploded_shingles_match_plain_explode(spark, sf_dir, shingle_n, with_size):
+    """``_exploded_shingles`` (explode_outer + a null filter) gives the
+    rows a plain ``explode`` gives over every shingle producer — true
+    only while no producer emits a null element, which this pins."""
+    edge = spark.createDataFrame(
+        [(-1, None), (-2, ""), (-3, "   "), (-4, "a"), (-5, "a a a b")],
+        "doc_id long, text string",
+    )
+    docs = table(spark, sf_dir, "documents").select("doc_id", "text").unionByName(edge)
+    sh = _shingled(docs, "doc_id", "text", shingle_n)
+    keep = ["doc_id", "n_sh"] if with_size else ["doc_id"]
+    plain = (
+        sh.withColumn("n_sh", F.size("shingles"))
+        .select(*keep, F.explode("shingles").alias("sh_raw"))
+        .select(*keep, F.xxhash64("sh_raw").alias("s"))
+    )
+    got = sorted(map(tuple, _exploded_shingles(sh, with_size).collect()))
+    assert got and got == sorted(map(tuple, plain.collect()))
 
 
 def test_lsh_recall_vs_exact_jaccard(spark, sf_dir):

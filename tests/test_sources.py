@@ -189,6 +189,40 @@ def test_envelope_canonical_dedups_scrambled_twin(spark):
     assert keys == ["k1", "k4", "k5"]
 
 
+def test_stream_dedup_canonicalizes_typed_payloads(spark, tmp_path):
+    """A3 ONLINE: a scrambled-field-order MqttRawMessage dedups against
+    its canonical twin through envelope → typed canonicalize → stateful
+    stream dedup, while the same scramble under PassengerCount stays two
+    records (raw-bytes identity, Deduplicator.java:76-106)."""
+    from transitdata_hfp_deduplicator_spark.sources.envelope import (
+        envelope_from_rows,
+        with_envelope_canonical,
+    )
+    from transitdata_hfp_deduplicator_spark.streaming import (
+        parquet_stream,
+        run_to_memory,
+        stream_dedup,
+    )
+
+    base = dt.datetime(2024, 1, 1, 12, 0, 0)
+    m = _mqtt_raw(1, "/hfp/v1/journey", b'{"VP":{"spd":7}}')
+    m_scr = _mqtt_raw(1, "/hfp/v1/journey", b'{"VP":{"spd":7}}', order=(3, 1, 2))
+    mqtt = {"protobuf-schema": "MqttRawMessage", "schema-version": "1"}
+    pc = {"protobuf-schema": "PassengerCount", "schema-version": "1"}
+    rows = [
+        ("k1", m, base, mqtt),
+        ("k2", m_scr, base.replace(second=1), mqtt),  # canonical dup of k1
+        ("k3", m, base.replace(second=2), pc),  # same bytes as k1 -> dup
+        ("k4", m_scr, base.replace(second=3), pc),  # raw-bytes: unique
+    ]
+    src = str(tmp_path / "env")
+    envelope_from_rows(spark, rows).coalesce(1).write.parquet(src)
+
+    canonical = with_envelope_canonical(parquet_stream(spark, src))
+    uniques = run_to_memory(stream_dedup(canonical, ["canonical"], "event_time"))
+    assert sorted(r.key for r in uniques.collect()) == ["k1", "k4"]
+
+
 def test_canonical_payload_dispatch(spark):
     """Whitelisted schema tags route through the canonicalization hook;
     unknown tags and missing tags degrade to raw bytes

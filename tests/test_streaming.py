@@ -1,5 +1,4 @@
-"""Streaming operator semantics: stateful dedup, tumbling analytics,
-alert predicates, late-data handling."""
+"""Streaming operator semantics: stateful dedup and late-data handling."""
 
 from __future__ import annotations
 
@@ -7,18 +6,13 @@ import datetime as dt
 import os
 import time
 
-import pytest
 from pyspark.sql import functions as F
 
-from transitdata_hfp_deduplicator_spark.operators.dedup import with_dup_rank
 from transitdata_hfp_deduplicator_spark.streaming import (
     parquet_stream,
     run_to_memory,
     stream_dedup,
-    stream_dup_stats,
-    with_alerts,
 )
-from transitdata_hfp_deduplicator_spark.streaming.analytics import alert_code
 
 
 def test_stream_dedup_events(spark, sf_dir):
@@ -36,67 +30,6 @@ def test_stream_dedup_events(spark, sf_dir):
         .count()
     )
     assert out.count() == expected
-
-
-def test_stream_dup_stats_and_alerts(spark, sf_dir):
-    """The analytics side channel (Analytics.java:47-67) as a streaming
-    windowed aggregate over a prime/duplicate-tagged replay."""
-    from transitdata_hfp_deduplicator_spark.tables import read_parquet
-
-    path = os.path.join(sf_dir, "events.parquet")
-    tagged_batch = with_dup_rank(
-        read_parquet(spark, path), ["user_id", "event_type", "props"], ["ts", "event_id"]
-    ).select("ts", "is_prime", "delay_ms")
-    tmp = f"/tmp/tagged_{time.time_ns()}"
-    tagged_batch.coalesce(1).write.parquet(tmp)
-
-    stats = run_to_memory(
-        stream_dup_stats(parquet_stream(spark, tmp), window_duration="1 hour"),
-        "complete",
-    )
-    totals = stats.agg(F.sum("primes").alias("p"), F.sum("duplicates").alias("d")).collect()[0]
-    assert totals.p + totals.d == tagged_batch.count()
-
-    alerts = with_alerts(stats).collect()
-    for r in alerts:
-        # alert must agree with the ratio band (Analytics.java:50-60):
-        # >1.0 -> MORE_DUPLICATES (dups of primes from EARLIER windows
-        # can outnumber this window's primes — the reference's per-
-        # interval counters behave identically), <0.97 -> FEED_DOWN
-        if r.dup_ratio is None:
-            continue
-        if r.dup_ratio > 1.0:
-            assert r.alert == "MORE_DUPLICATES_THAN_PRIMARIES"
-        elif r.dup_ratio < 0.97:
-            assert r.alert == "FEED_DOWN"
-        else:
-            assert r.alert is None
-
-
-def test_alert_predicates_bands(spark):
-    rows = [
-        (0, 100, 99),   # ratio 0.99 -> healthy
-        (1, 100, 101),  # ratio 1.01 -> MORE_DUPLICATES_THAN_PRIMARIES
-        (2, 100, 50),   # ratio 0.50 -> FEED_DOWN
-    ]
-    df = spark.createDataFrame(rows, "window_start long, primes long, duplicates long")
-    stats = df.withColumn(
-        "dup_ratio", F.col("duplicates") / F.col("primes")
-    )
-    out = {r.window_start: r.alert for r in with_alerts(stats).collect()}
-    assert out[0] is None
-    assert out[1] == "MORE_DUPLICATES_THAN_PRIMARIES"
-    assert out[2] == "FEED_DOWN"
-
-
-@pytest.mark.parametrize("alert_on_threshold", [True, False])
-@pytest.mark.parametrize("ratio", [None, 0.9699, 0.97, 1.0, 1.0001])
-def test_alert_code_agrees_with_with_alerts(spark, ratio, alert_on_threshold):
-    """The listener's plain-Python band and the column band are one
-    rule: they agree at every band edge."""
-    df = spark.createDataFrame([(ratio,)], "dup_ratio double")
-    (row,) = with_alerts(df, alert_on_threshold=alert_on_threshold).collect()
-    assert row.alert == alert_code(ratio, alert_on_threshold=alert_on_threshold)
 
 
 def _two_batch_replay(spark, tmp_path, batch0_rows, batch1_rows, schema):

@@ -16,7 +16,7 @@ Layout:
     functions/ — digest, text-analysis, vector column expressions
     operators/ — dedup (exact + near-dup), joins (as-of), top-k, similarity
     sources/   — HFP fixture parsing, message-envelope schema
-    streaming/ — stateful streaming dedup, tumbling analytics + alerts
+    streaming/ — stateful streaming dedup, feed-health listener + alerts
     plans/     — plan-inspection helpers (pushdown / broadcast asserts)
     queries    — the declared query registry (driver contract)
 """

@@ -5,7 +5,9 @@ pattern (``key=${?ENV_VAR}``, environment.conf:8,13,25).
 Defaults mirror the reference's shipped values exactly; the TTL is
 ENFORCED here (via watermark state expiry) where the reference only
 declared it (Deduplicator.java:36-40 reads cacheTTL and never applies
-it).
+it).  The reference's broker topics (``PULSAR_*``) and per-duplicate
+alert (``APPLICATION_ALERT_ON_DUPLICATE``) are not read: the
+application has no broker and no per-duplicate alert.
 """
 
 from __future__ import annotations
@@ -20,18 +22,6 @@ def _env(name: str, default: str) -> str:
 
 @dataclass(frozen=True)
 class DedupConfig:
-    # source (environment.conf:4-16)
-    topic: str = field(default_factory=lambda: _env("PULSAR_CONSUMER_TOPIC", "hfp-raw"))
-    multiple_topics: bool = field(
-        default_factory=lambda: _env("PULSAR_CONSUMER_MULTIPLE_TOPICS", "false") == "true"
-    )
-    topics_pattern: str = field(
-        default_factory=lambda: _env("PULSAR_CONSUMER_TOPICS_PATTERN", "")
-    )
-    # sink (environment.conf:17-20)
-    output_topic: str = field(
-        default_factory=lambda: _env("PULSAR_PRODUCER_TOPIC", "hfp-dedup")
-    )
     # state TTL (environment.conf:24 — "4 hours"; enforced here)
     cache_ttl_ms: int = field(
         default_factory=lambda: int(_env("APPLICATION_CACHE_TTL_SECONDS", "14400")) * 1000
@@ -46,11 +36,4 @@ class DedupConfig:
     )
     alert_on_threshold: bool = field(
         default_factory=lambda: _env("APPLICATION_ALERT_ON_THRESHOLD", "true") == "true"
-    )
-    # per-duplicate alert (environment.conf:33-34 — "alertOnDuplicate =
-    # false"; Analytics.java:69-75 fires on EVERY duplicate with its
-    # inter-duplicate delay when enabled)
-    alert_on_duplicate: bool = field(
-        default_factory=lambda: _env("APPLICATION_ALERT_ON_DUPLICATE", "false")
-        == "true"
     )

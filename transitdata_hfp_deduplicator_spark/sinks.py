@@ -8,22 +8,20 @@ package the idiomatic patterns:
 
 * ``write_stream_parquet`` — checkpointed streaming append: exactly-once
   into an idempotent file sink (checkpoint tracks committed batches).
-* ``alert_sink`` — the reference's alert channel (Analytics.java:50-60)
-  as a ``foreachBatch`` consumer: per-batch alert rows are handed to a
-  callback (log/pager/topic producer) with the batch id for idempotent
-  delivery.
+* ``write_bucketed`` — a bucketed batch table, the co-located layout
+  for a persisted dedup index.
+
+The application's own sink is the parquet ``writeStream`` in
+``__main__``; its alerts are the feed-health records printed by
+``streaming/listener.py``.
 """
 
 from __future__ import annotations
 
-import os
-from collections.abc import Callable
-
 from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
+from pyspark.sql.streaming import StreamingQuery
 
 from transitdata_hfp_deduplicator_spark.streaming.runner import ephemeral_dir
-from pyspark.sql.streaming import StreamingQuery
 
 
 def write_stream_parquet(
@@ -42,33 +40,6 @@ def write_stream_parquet(
             checkpoint or ephemeral_dir("sink_ckpt_"),
         )
         .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-
-
-def alert_sink(
-    stats_stream: DataFrame,
-    on_alerts: Callable[[list, int], None],
-    checkpoint: str | None = None,
-) -> StreamingQuery:
-    """Route alert rows (streaming/analytics.with_alerts output) to a
-    callback per micro-batch — the Spark shape of the reference's
-    logger.error alert channel. The callback receives (rows, batch_id);
-    batch_id makes downstream delivery idempotent under replays."""
-
-    def handle(batch_df: DataFrame, batch_id: int) -> None:
-        alerts = batch_df.filter(F.col("alert").isNotNull()).collect()
-        if alerts:
-            on_alerts(alerts, batch_id)
-
-    return (
-        stats_stream.writeStream.foreachBatch(handle)
-        .option(
-            "checkpointLocation",
-            checkpoint or ephemeral_dir("alert_ckpt_"),
-        )
-        .outputMode("update")
         .trigger(availableNow=True)
         .start()
     )

@@ -1,24 +1,21 @@
 """Broker source adapters (reference A1: Pulsar consumer, 1..N topics).
 
-No broker or connector jar ships in this environment, so the adapters
-split into (a) the ``readStream`` wiring — correct options for the
-Kafka source and the StreamNative pulsar-spark connector, which needs
-its jar on the classpath — and (b) the COLUMN MAPPING from each
-source's output shape to the engine's message envelope, which is plain
-column algebra and fully unit-tested against batch frames of the same
-shape (tests/test_sources.py).  Everything downstream (canonicalize →
-dedup → analytics → sink) is source-agnostic.
+No broker or connector jar ships with this project, so what lives here
+is what runs without one:
 
-CLOSED (probed rounds 5, 7, 8, 9 and 10, unchanged): no ``spark-sql-kafka`` /
-``pulsar-spark-connector`` jar under pyspark's ``jars/``, no ivy
-cache, no network to fetch one — a live-broker integration run is
-impossible in this sandbox, permanently.  The executable analogs
-carrying the contracts instead: the socket source below (live
-unbounded network ingestion through real micro-batch machinery) and
-the registered ``hfp_text`` Python DataSource
-(sources/hfp_datasource.py: offset-range replay == broker offsets,
-staged-commit sink == ack-after-persist), leaving only the vendor jar
-itself unexercised.
+* the COLUMN MAPPING from the Kafka source's and the StreamNative
+  pulsar-spark connector's output shapes to the engine's message
+  envelope (``kafka_to_envelope``, ``pulsar_to_envelope``) — plain
+  column algebra, unit-tested against batch frames of the same shape
+  (tests/test_sources.py).  A deployment with a connector jar applies
+  it to its own ``spark.readStream.format("kafka"|"pulsar")`` frame;
+* ``socket_line_stream`` — Spark's built-in socket source, the one
+  live network source that needs no jar.
+
+Everything downstream (canonicalize → dedup → sink) is
+source-agnostic.  The application itself reads files through the
+``hfp_text`` Python DataSource (sources/hfp_datasource.py), whose
+``{"pos": N}`` byte offsets replay like broker offsets.
 """
 
 from __future__ import annotations
@@ -56,24 +53,6 @@ def pulsar_to_envelope(df: DataFrame) -> DataFrame:
     )
 
 
-def kafka_envelope_stream(
-    spark: SparkSession,
-    bootstrap_servers: str,
-    subscribe_pattern: str,
-) -> DataFrame:
-    """Envelope stream from Kafka.  ``subscribePattern`` is the 1:1
-    analog of the reference's multi-topic regex subscription
-    (environment.conf:10-16)."""
-    raw = (
-        spark.readStream.format("kafka")
-        .option("kafka.bootstrap.servers", bootstrap_servers)
-        .option("subscribePattern", subscribe_pattern)
-        .option("includeHeaders", "true")
-        .load()
-    )
-    return kafka_to_envelope(raw)
-
-
 def socket_line_stream(spark: SparkSession, host: str, port: int) -> DataFrame:
     """Unbounded line stream over TCP via Spark's built-in socket source
     — the one network source that needs no connector jar, so it is the
@@ -92,22 +71,3 @@ def socket_line_stream(spark: SparkSession, host: str, port: int) -> DataFrame:
         .option("port", str(port))
         .load()
     )
-
-
-def pulsar_envelope_stream(
-    spark: SparkSession,
-    service_url: str,
-    admin_url: str,
-    topics_pattern: str,
-) -> DataFrame:
-    """Envelope stream from Pulsar via the StreamNative connector
-    (requires its jar on the classpath — absent here; the reference's
-    exact source, environment.conf:4-16)."""
-    raw = (
-        spark.readStream.format("pulsar")
-        .option("service.url", service_url)
-        .option("admin.url", admin_url)
-        .option("topicsPattern", topics_pattern)
-        .load()
-    )
-    return pulsar_to_envelope(raw)

@@ -1,5 +1,4 @@
 from transitdata_hfp_deduplicator_spark.streaming.runner import (
-    allow_chained_stateful,
     ephemeral_dir,
     parquet_stream,
     replay_shuffle_partitions,
@@ -11,13 +10,8 @@ from transitdata_hfp_deduplicator_spark.streaming.dedup_stream import stream_ded
 from transitdata_hfp_deduplicator_spark.streaming.neardup_stream import (
     neardup_tag_stream,
 )
-from transitdata_hfp_deduplicator_spark.streaming.analytics import (
-    stream_dup_stats,
-    with_alerts,
-)
 
 __all__ = [
-    "allow_chained_stateful",
     "ephemeral_dir",
     "parquet_stream",
     "scoped_conf",
@@ -26,6 +20,4 @@ __all__ = [
     "run_to_memory",
     "scoped_shuffle_partitions",
     "stream_dedup",
-    "stream_dup_stats",
-    "with_alerts",
 ]

@@ -11,6 +11,10 @@ processing-time windows anchored at its construction, like the
 reference's fixed-rate scheduler.  A window closes on the first
 progress or idle event after its end; the open window is flushed, up
 to that moment, when the query terminates.
+
+Alert band (Analytics.java:50-60; thresholds environment.conf:29-34):
+  ratio > 1.0                         -> more duplicates than primaries
+  alert_on && ratio < ratio_threshold -> feed down / one feed missing
 """
 
 from __future__ import annotations
@@ -25,11 +29,13 @@ from collections.abc import Callable
 from pyspark.sql.streaming import StreamingQueryListener
 
 from transitdata_hfp_deduplicator_spark.config import DedupConfig
-from transitdata_hfp_deduplicator_spark.streaming.analytics import alert_code
 
 logger = logging.getLogger(__name__)
 
 OBSERVATION = "dedup"  # name of the forward query's observed prime count
+
+MORE_DUPLICATES = "MORE_DUPLICATES_THAN_PRIMARIES"
+FEED_DOWN = "FEED_DOWN"
 
 _UNIT_S = {"millisecond": 1e-3, "second": 1.0, "minute": 60.0, "hour": 3600.0, "day": 86400.0}
 
@@ -41,6 +47,18 @@ def interval_seconds(interval: str) -> float:
     if seconds <= 0:
         raise ValueError(f"not a positive interval: {interval!r}")
     return seconds
+
+
+def alert_code(
+    ratio: float | None, ratio_threshold: float, alert_on_threshold: bool
+) -> str | None:
+    """The alert band for one window's ratio; a None ratio (no primes)
+    raises nothing."""
+    if ratio is not None and ratio > 1.0:
+        return MORE_DUPLICATES
+    if ratio is not None and alert_on_threshold and ratio < ratio_threshold:
+        return FEED_DOWN
+    return None
 
 
 def _iso(t: float) -> str:

@@ -192,27 +192,6 @@ def scoped_conf(spark: SparkSession, key: str, value: str):
 
 
 @contextlib.contextmanager
-def allow_chained_stateful(spark: SparkSession):
-    """Scope for starting a streaming query that chains two stateful
-    operators (dedup tagging -> windowed agg).
-
-    Spark's global-watermark correctness check refuses that shape
-    outright; in the dedup pipeline the only rows the dedup op emits
-    behind the watermark are late INPUT rows, which the downstream
-    window classifies late by the same watermark — the outcome is
-    identical to a single-operator pipeline, so the check is safely
-    disabled *for the query started inside this scope* (the check runs
-    at query start; the restored session default governs every other
-    query)."""
-    with scoped_conf(
-        spark,
-        "spark.sql.streaming.statefulOperator.checkCorrectness.enabled",
-        "false",
-    ):
-        yield
-
-
-@contextlib.contextmanager
 def scoped_shuffle_partitions(spark: SparkSession, n: int):
     """Temporarily set the shuffle-partition count for a streaming
     query's lifetime.

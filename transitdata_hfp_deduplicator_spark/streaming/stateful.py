@@ -7,9 +7,9 @@ report ``elapsedSinceHit`` (the time since the key's first occurrence,
 Deduplicator.java:56) for each suppressed message — the number the
 analytics side channel averages (Analytics.java:72-75).  This operator
 keeps (first_seen, hit_count) per digest in ``applyInPandasWithState``
-state and emits EVERY row tagged ``is_prime`` + ``delay_ms``, so the
-downstream tumbling aggregation (streaming/analytics.py) computes the
-reference's full metric set online.
+state and emits EVERY row tagged ``is_prime`` + ``delay_ms``, so a
+downstream tumbling aggregation (``q_dup_stats_stream`` in queries.py)
+computes the reference's full metric set online.
 
 Scale shape: state is hash-partitioned by digest; per-batch work is
 Arrow-batched pandas per key-group; state TTL via event-time timeout =
