@@ -324,3 +324,49 @@ def test_socket_replay_golden(spark):
     got = spark.read.parquet(out_dir)
     assert got.count() == 4956  # ITDeduplicatorTest.java:92-93
     assert got.select("identity").distinct().count() == 4956
+
+
+def test_hfp_corpus_resolves_reference_then_sample(tmp_path):
+    """``q_hfp_*`` read the reference's corpus where that file exists and
+    the committed sample otherwise; both oracles read the same path."""
+    import os
+
+    from transitdata_hfp_deduplicator_spark import queries
+
+    reference = tmp_path / "hfp-5000.txt"
+    reference.write_text("2018-10-09T04:32:52.549698+0000 /hfp/v1/t {}\n")
+    assert queries.resolve_hfp_corpus(str(reference)) == str(reference)
+    absent = str(tmp_path / "absent.txt")
+    assert queries.resolve_hfp_corpus(absent) == queries.HFP_SAMPLE
+    assert os.path.isfile(queries.HFP_SAMPLE)
+    assert queries.HFP_CORPUS == queries.resolve_hfp_corpus()
+    for name in ("q_hfp_golden", "q_hfp_domain"):
+        assert f"read_csv('{queries.HFP_CORPUS}'" in queries.ORACLES[name]
+
+
+def test_hfp_golden_over_sample_matches_python_recount(spark, sf_dir, monkeypatch):
+    """``q_hfp_golden`` over the committed sample agrees with a plain
+    recount by the first-space/first-brace rule
+    (ITDeduplicatorTest.java:138-148), and the recount shows the sample's
+    planted truth: 1000 lines, 500 uniques, each delivered once per feed."""
+    from transitdata_hfp_deduplicator_spark import queries
+
+    copies: dict[tuple[str, str], int] = {}
+    with open(queries.HFP_SAMPLE, encoding="utf-8") as f:
+        for line in f:
+            line = line.rstrip("\n")
+            sp, brace = line.find(" "), line.find("{")
+            key = (line[sp + 1 : brace].strip(), line[brace:])
+            copies[key] = copies.get(key, 0) + 1
+    n_messages = sum(copies.values())
+    n_topics = len({topic for topic, _ in copies})
+    assert (n_messages, len(copies), n_topics) == (1000, 500, 498)
+    assert set(copies.values()) == {2}
+
+    monkeypatch.setattr(queries, "HFP_CORPUS", queries.HFP_SAMPLE)
+    (row,) = queries.QUERIES["q_hfp_golden"](spark, sf_dir).collect()
+    assert row.asDict() == {
+        "n_messages": n_messages,
+        "n_unique": len(copies),
+        "n_topics": n_topics,
+    }

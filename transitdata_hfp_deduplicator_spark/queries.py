@@ -21,6 +21,7 @@ columns matched by name):
 
 from __future__ import annotations
 
+import os
 from collections.abc import Callable
 
 from pyspark.sql import Column, DataFrame, SparkSession
@@ -6151,24 +6152,46 @@ def q_canonical_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
 # HFP golden parity + sliding windows + unpivot
 # ---------------------------------------------------------------------------
 
+# the reference's integration-test corpus; rebound below to the path
+# the q_hfp_* queries actually read
 HFP_CORPUS = "/root/reference/src/integration-test/resources/hfp-5000.txt"
+# seeded two-feed sample in the same line format, committed with the
+# package (FIXTURES.md A1): `python3 perfbench/hfpgen.py 1 25 20 OUT`
+HFP_SAMPLE = os.path.join(
+    os.path.dirname(os.path.abspath(__file__)), "sources", "hfp-sample.txt"
+)
+
+
+def resolve_hfp_corpus(reference: str = HFP_CORPUS) -> str:
+    """The corpus the ``q_hfp_*`` queries and their oracles read: the
+    reference's golden file (5,000 lines -> 4,956 uniques) where it
+    exists, else the committed sample (1,000 lines -> 500 uniques)."""
+    return reference if os.path.isfile(reference) else HFP_SAMPLE
+
+
+# resolved once, so each Spark query and its DuckDB oracle read one file
+HFP_CORPUS = resolve_hfp_corpus()
+_hfp_sql_path = HFP_CORPUS.replace("'", "''")
+# the A1 line parse (first space, first brace) shared by both oracles
+_HFP_PARSED_SQL = rf"""
+    lines AS (
+        SELECT column0 AS line
+        FROM read_csv('{_hfp_sql_path}',
+                      sep=e'\x01', header=false, quote='',
+                      columns={{'column0': 'VARCHAR'}})
+    ),
+    parsed AS (
+        SELECT trim(substr(line, instr(line, ' ') + 1,
+                    instr(line, '{{') - instr(line, ' ') - 1)) AS topic,
+               substr(line, instr(line, '{{')) AS payload
+        FROM lines
+    )"""
 
 
 @query(
     "q_hfp_golden",
-    oracle=r"""
-    WITH lines AS (
-        SELECT column0 AS line
-        FROM read_csv('/root/reference/src/integration-test/resources/hfp-5000.txt',
-                      sep=e'\x01', header=false, quote='',
-                      columns={'column0': 'VARCHAR'})
-    ),
-    parsed AS (
-        SELECT trim(substr(line, instr(line, ' ') + 1,
-                    instr(line, '{') - instr(line, ' ') - 1)) AS topic,
-               substr(line, instr(line, '{')) AS payload
-        FROM lines
-    )
+    oracle=f"""
+    WITH {_HFP_PARSED_SQL}
     SELECT count(*) AS n_messages,
            count(DISTINCT topic || ' ' || payload) AS n_unique,
            count(DISTINCT topic) AS n_topics
@@ -6176,12 +6199,13 @@ HFP_CORPUS = "/root/reference/src/integration-test/resources/hfp-5000.txt"
     """,
 )
 def q_hfp_golden(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The reference's golden test as a declared query: parse the REAL
-    5000-message HFP corpus (first-space/first-brace rule,
-    ITDeduplicatorTest.java:138-148) and count uniques by
-    topic+payload identity — must be exactly 5000 -> 4956
-    (ITDeduplicatorTest.java:92-93). The oracle re-parses the same
-    file in SQL."""
+    """The reference's golden test as a declared query: parse the HFP
+    corpus (first-space/first-brace rule, ITDeduplicatorTest.java:138-148)
+    and count uniques by topic+payload identity.  Over the reference's
+    5000-message file, where present, that is exactly 5000 -> 4956
+    (ITDeduplicatorTest.java:92-93); otherwise over the committed sample
+    it is 1000 -> 500, each unique once per feed (``HFP_CORPUS``).  The
+    oracle re-parses the same file in SQL."""
     from transitdata_hfp_deduplicator_spark.sources import hfp
 
     corpus = hfp.read_corpus(spark, HFP_CORPUS)
@@ -6608,19 +6632,8 @@ def q_stream_static_join(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "q_hfp_domain",
-    oracle=r"""
-    WITH lines AS (
-        SELECT column0 AS line
-        FROM read_csv('/root/reference/src/integration-test/resources/hfp-5000.txt',
-                      sep=e'\x01', header=false, quote='',
-                      columns={'column0': 'VARCHAR'})
-    ),
-    parsed AS (
-        SELECT trim(substr(line, instr(line, ' ') + 1,
-                    instr(line, '{') - instr(line, ' ') - 1)) AS topic,
-               substr(line, instr(line, '{')) AS payload
-        FROM lines
-    ),
+    oracle=f"""
+    WITH {_HFP_PARSED_SQL},
     decoded AS (
         SELECT string_split(topic, '/')[4] AS journey_type,
                string_split(topic, '/')[6] AS transport_mode,
@@ -6643,7 +6656,9 @@ def q_stream_static_join(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q_hfp_domain(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Full HFP domain decode (reference data model, SURVEY.md §1.3):
     hierarchical topic -> named parts, VP JSON -> typed 18-field
-    struct, then per-(journey_type, transport_mode) fleet stats. The
+    struct, then per-(journey_type, transport_mode) fleet stats.  Reads
+    ``HFP_CORPUS``: the reference's 5000-line file (4956 uniques) where
+    present, else the committed 1000-line sample (500 uniques).  The
     oracle re-parses topic and JSON in SQL over the same corpus."""
     from transitdata_hfp_deduplicator_spark.sources import hfp
 
