@@ -59,7 +59,6 @@ SLOW_TESTS = {
     "test_clusters.py::test_large_small_star_random_graphs",
     "test_clusters.py::test_large_small_star_deep_chain",
     "test_clusters.py::test_distributed_path_matches_unionfind",
-    "test_sources.py::test_socket_replay_golden",
     "test_sources.py::test_stream_dedup_canonicalizes_typed_payloads",
     "test_listener.py::test_listener_captures_failure",
     "test_similarity.py::test_exploded_shingles_match_plain_explode",

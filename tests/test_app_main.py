@@ -89,6 +89,27 @@ def test_app_drains_file_larger_than_one_batch(spark, tmp_path, capsys, make_hfp
     assert sum(r["primes"] for r in records) == len(feed.uniques)
 
 
+def test_app_forwards_each_distinct_malformed_line(spark, tmp_path, capsys):
+    """A malformed line keeps its text in its (topic, payload) identity,
+    so distinct malformed lines are distinct uniques, not one shared
+    empty identity that turns the rest into duplicates."""
+    topic = "/hfp/v1/journey/ongoing/vp/bus/0012/01234/1057/1/Kamppi/7:20/1040/3/60;24/19/73/47"
+    payload = '{"VP":{"veh":1}}'
+    source = tmp_path / "malformed.txt"
+    source.write_text(
+        f"2018-10-09T04:32:52.549Z {topic} {payload}\n"
+        f"2018-10-09T04:32:52.601Z {topic} {payload}\n"
+        "garbage line one\n"
+        "garbage line two\n"
+        '{"VP":{"veh":2}} no-topic\n'
+    )
+    out = str(tmp_path / "out")
+    (rec,) = _run(capsys, str(source), out, str(tmp_path / "ckpt"))
+    assert spark.read.parquet(out).count() == 4
+    assert (rec["messages"], rec["primes"], rec["duplicates"]) == (5, 4, 1)
+    assert rec["alert"] == "FEED_DOWN"
+
+
 @pytest.mark.skipif(not os.path.exists(CORPUS), reason="reference corpus absent")
 def test_app_golden_corpus(spark, tmp_path, capsys):
     """Reference parity on the one wiring: the reference's 5,000-message

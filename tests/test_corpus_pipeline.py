@@ -1,17 +1,15 @@
-"""End-to-end LLM-corpus curation pipeline over the JSONL boundary:
+"""End-to-end LLM-corpus curation pipeline over the ``documents`` table:
 
-    JSONL shards in → quarantine split → normalize-dedup → quality
-    filter → train/valid/test hash split → JSONL shards out
+    documents → normalize-dedup → quality filter → train/valid/test
+    hash split
 
 Each stage is an operator this engine already oracle-checks in
 isolation; this test pins that the COMPOSITION behaves — row
-accounting balances exactly, the output is deterministic across runs,
-and the round-tripped corpus re-reads clean.
+accounting balances exactly at every stage and the output is
+deterministic across runs.
 """
 
 from __future__ import annotations
-
-import os
 
 import pyspark.sql.functions as F
 from pyspark.sql.window import Window as W
@@ -19,14 +17,10 @@ from pyspark.sql.window import Window as W
 from transitdata_hfp_deduplicator_spark import tables
 from transitdata_hfp_deduplicator_spark.functions import text as TXT
 from transitdata_hfp_deduplicator_spark.operators.sampling import hash_split
-from transitdata_hfp_deduplicator_spark.sources.corpus import (
-    read_jsonl,
-    write_jsonl,
-)
 
 
-def _curate(spark, src_dir):
-    docs, quarantine = read_jsonl(spark, src_dir)
+def _curate(docs):
+    """(fingerprinted docs, dedup survivors, quality-kept, split)."""
     norm = F.regexp_replace(
         F.trim(F.regexp_replace(F.lower(F.col("text")), "[^a-z0-9 ]", "")),
         " +",
@@ -39,43 +33,36 @@ def _curate(spark, src_dir):
             F.row_number().over(W.partitionBy("fp").orderBy("doc_id")) == 1,
         )
         .filter("keep")
-        .drop("fp", "keep")
+        .drop("keep")
     )
     scored = deduped.withColumn("q", TXT.quality_score(F.col("text")))
     kept = scored.filter(F.col("q") >= 0.5).drop("q")
-    return hash_split(kept, ["doc_id"]), quarantine, docs
+    return fp, deduped, kept, hash_split(kept.drop("fp"), ["doc_id"])
 
 
-def test_curation_pipeline_accounts_for_every_row(spark, sf_dir, tmp_path):
-    d = tables.table(spark, sf_dir, "documents")
-    src = str(tmp_path / "in")
-    write_jsonl(d, src, shards=2)
+def test_curation_pipeline_accounts_for_every_row(spark, sf_dir):
+    docs = tables.table(spark, sf_dir, "documents")
+    fp, deduped, kept, split = _curate(docs)
+    n_in = docs.count()
 
-    split, quarantine, raw = _curate(spark, src)
-    assert quarantine.count() == 0
-    n_in = raw.count()
-    assert n_in == d.count()
-
-    out = str(tmp_path / "out")
-    write_jsonl(split.withColumn("source", F.col("split")).drop("split"), out, shards=3)
-    back, q2 = read_jsonl(spark, out)
-    assert q2.count() == 0
-
-    # accounting: output rows == kept rows; every doc_id unique; splits
-    # partition the kept set
-    n_out = back.count()
-    assert n_out == split.count()
-    assert back.select("doc_id").distinct().count() == n_out
-    assert n_out <= n_in
-    assert n_out > 0
+    # dedup keeps exactly one row per normalized fingerprint
+    n_fp = fp.select("fp").distinct().count()
+    assert deduped.count() == n_fp
+    assert deduped.select("fp").distinct().count() == n_fp
+    # the quality filter only drops rows; the split only labels them
+    n_kept = kept.count()
+    assert 0 < n_kept <= n_fp <= n_in
+    assert split.count() == n_kept
+    assert split.select("doc_id").distinct().count() == n_kept
+    counts = {r.split: r["count"] for r in split.groupBy("split").count().collect()}
+    assert sum(counts.values()) == n_kept
+    assert set(counts) <= {"train", "valid", "test"}
 
 
-def test_curation_pipeline_is_deterministic(spark, sf_dir, tmp_path):
-    d = tables.table(spark, sf_dir, "documents")
-    src = str(tmp_path / "in")
-    write_jsonl(d, src, shards=2)
-    a, _, _ = _curate(spark, src)
-    b, _, _ = _curate(spark, src)
+def test_curation_pipeline_is_deterministic(spark, sf_dir):
+    docs = tables.table(spark, sf_dir, "documents")
+    a = _curate(docs)[-1]
+    b = _curate(docs.repartition(7))[-1]
     ra = {(r.doc_id, r.split) for r in a.select("doc_id", "split").collect()}
     rb = {(r.doc_id, r.split) for r in b.select("doc_id", "split").collect()}
     assert ra == rb

@@ -128,3 +128,56 @@ def test_exact_flag_percentiles_bit_identical_to_percentile(spark, sf_dir):
             )
     refd, newd = ref_vs_new(spark.createDataFrame(rows))
     assert refd == newd
+
+
+_NULL_FLAG_ROWS = [
+    ("A", 1, 10, 1.5, 1.0),
+    ("A", 2, 11, 2.5, 3.0),
+    ("N", 3, 12, None, None),  # both columns all NULL
+    ("R", 4, 13, None, 2.0),  # prices all NULL
+    ("R", 5, 14, None, 4.0),
+]
+_NULL_FLAG_SCHEMA = (
+    "l_returnflag string, l_orderkey long, l_partkey long, "
+    "l_extendedprice double, l_quantity double"
+)
+
+
+def test_exact_flag_percentiles_null_groups(spark):
+    """The contract on NULLs, pinned against F.percentile: a flag whose
+    two columns are all NULL has no row, and a column with no non-NULL
+    value reads as an array of NULLs where F.percentile gives NULL."""
+    from transitdata_hfp_deduplicator_spark.queries import _exact_flag_percentiles
+
+    li = spark.createDataFrame(_NULL_FLAG_ROWS, _NULL_FLAG_SCHEMA)
+    ref = {
+        r.l_returnflag: (r.x_price, r.x_qty)
+        for r in li.groupBy("l_returnflag")
+        .agg(
+            F.percentile("l_extendedprice", F.array(F.lit(0.45), F.lit(0.55))).alias(
+                "x_price"
+            ),
+            F.percentile(
+                "l_quantity", F.array(F.lit(0.45), F.lit(0.55), F.lit(0.98))
+            ).alias("x_qty"),
+        )
+        .collect()
+    }
+    new = {
+        r.l_returnflag: (r.x_price, r.x_qty)
+        for r in _exact_flag_percentiles(li).collect()
+    }
+    assert ref["N"] == (None, None) and "N" not in new
+    assert ref["R"][0] is None and new["R"][0] == [None, None]
+    assert new["R"][1] == ref["R"][1]
+    assert new["A"] == ref["A"]
+
+
+def test_agg_approx_check_keeps_all_null_flag(spark, tmp_path):
+    """q_agg_approx_check keeps a group whose percentile columns are all
+    NULL: its percentiles join on the left."""
+    spark.createDataFrame(_NULL_FLAG_ROWS, _NULL_FLAG_SCHEMA).write.parquet(
+        str(tmp_path / "lineitem.parquet")
+    )
+    out = QUERIES["q_agg_approx_check"](spark, str(tmp_path)).collect()
+    assert {(r.l_returnflag, r.n) for r in out} == {("A", 2), ("N", 1), ("R", 2)}

@@ -1,61 +1,9 @@
-"""Broker adapter column mappings (testable without a broker) and the
-envelope canonical-payload dispatch."""
+"""The envelope's typed canonicalization path (reference A3) and the
+HFP corpus the registry's ``q_hfp_*`` read."""
 
 from __future__ import annotations
 
 import datetime as dt
-
-from pyspark.sql import functions as F
-
-from transitdata_hfp_deduplicator_spark.sources.broker import (
-    kafka_to_envelope,
-    pulsar_to_envelope,
-)
-from transitdata_hfp_deduplicator_spark.sources.envelope import (
-    KEY_PROTOBUF_SCHEMA,
-    canonical_payload,
-)
-
-
-def test_kafka_shape_maps_to_envelope(spark):
-    rows = [
-        (
-            b"veh-1",
-            b"payload-bytes",
-            dt.datetime(2024, 1, 1, 12, 0, 0),
-            [("protobuf-schema", b"MqttRawMessage"), ("schema-version", b"1")],
-        ),
-        (b"veh-2", b"other", dt.datetime(2024, 1, 1, 12, 0, 1), None),
-    ]
-    df = spark.createDataFrame(
-        rows,
-        "key binary, value binary, timestamp timestamp, "
-        "headers array<struct<key: string, value: binary>>",
-    )
-    env = kafka_to_envelope(df).collect()
-    assert env[0].key == "veh-1"
-    assert env[0].properties[KEY_PROTOBUF_SCHEMA] == "MqttRawMessage"
-    assert env[0].value == b"payload-bytes"
-    assert env[1].properties == {}  # null headers -> empty map, not null
-
-
-def test_pulsar_shape_maps_to_envelope(spark):
-    rows = [
-        (
-            b"veh-1",
-            b"data",
-            dt.datetime(2024, 1, 1, 12, 0, 0),
-            {"protobuf-schema": "HfpData"},
-        )
-    ]
-    df = spark.createDataFrame(
-        rows,
-        "__key binary, value binary, __eventTime timestamp, "
-        "__properties map<string,string>",
-    )
-    env = pulsar_to_envelope(df).collect()[0]
-    assert env.key == "veh-1"
-    assert env.properties["protobuf-schema"] == "HfpData"
 
 
 # --- typed protobuf canonicalization through the envelope path (A3) --------
@@ -221,109 +169,6 @@ def test_stream_dedup_canonicalizes_typed_payloads(spark, tmp_path):
     canonical = with_envelope_canonical(parquet_stream(spark, src))
     uniques = run_to_memory(stream_dedup(canonical, ["canonical"], "event_time"))
     assert sorted(r.key for r in uniques.collect()) == ["k1", "k4"]
-
-
-def test_canonical_payload_dispatch(spark):
-    """Whitelisted schema tags route through the canonicalization hook;
-    unknown tags and missing tags degrade to raw bytes
-    (Deduplicator.java:76-93)."""
-    rows = [
-        ("a", b"x", {"protobuf-schema": "MqttRawMessage"}),
-        ("b", b"y", {"protobuf-schema": "TotallyUnknown"}),
-        ("c", b"z", None),
-    ]
-    df = spark.createDataFrame(
-        rows, "key string, value binary, properties map<string,string>"
-    )
-    out = df.select("key", canonical_payload().alias("canon")).collect()
-    got = {r.key: r.canon for r in out}
-    assert got == {"a": b"x", "b": b"y", "c": b"z"}
-
-
-def test_socket_replay_golden(spark):
-    """hfp-5000.txt replayed over a REAL TCP socket (Spark's built-in
-    receiver-backed socket source — no connector jar) through
-    parse → dedup: 4956 uniques.  This is the closest executable analog
-    of the reference's live-broker integration test, which sends the
-    corpus over a Pulsar connection and awaits the deduped output
-    (ITDeduplicatorTest.java:64-113): a true unbounded network source,
-    not a file replay."""
-    import os
-    import socket
-    import threading
-    import time
-
-    import pytest
-
-    from transitdata_hfp_deduplicator_spark.sources import hfp
-    from transitdata_hfp_deduplicator_spark.sources.broker import (
-        socket_line_stream,
-    )
-    from transitdata_hfp_deduplicator_spark.streaming import ephemeral_dir
-
-    corpus = "/root/reference/src/integration-test/resources/hfp-5000.txt"
-    if not os.path.exists(corpus):
-        pytest.skip("reference corpus absent")
-    with open(corpus, "rb") as f:
-        lines = f.read().splitlines()
-
-    done = threading.Event()
-    srv = socket.socket(socket.AF_INET, socket.SOCK_STREAM)
-    srv.setsockopt(socket.SOL_SOCKET, socket.SO_REUSEADDR, 1)
-    srv.bind(("127.0.0.1", 0))
-    srv.listen(1)
-    port = srv.getsockname()[1]
-
-    def serve() -> None:
-        conn, _ = srv.accept()  # Spark connects when the query starts
-        with conn:
-            conn.sendall(b"\n".join(lines) + b"\n")
-            done.wait(120)  # hold the connection until the query stops
-
-    t = threading.Thread(target=serve, daemon=True)
-    t.start()
-
-    out_dir = os.path.join(ephemeral_dir("socket_golden_"), "data")
-    parsed = hfp.dedup_identity(
-        hfp.parse_lines(socket_line_stream(spark, "127.0.0.1", port))
-    )
-    deduped = parsed.dropDuplicates(["identity"])
-
-    def spool(batch_df, _bid):
-        batch_df.select("identity").write.mode("append").parquet(out_dir)
-
-    q = (
-        deduped.writeStream.foreachBatch(spool)
-        .outputMode("append")
-        .option(
-            "checkpointLocation",
-            os.path.join(ephemeral_dir("socket_golden_ck_"), "ckpt"),
-        )
-        .trigger(processingTime="500 milliseconds")
-        .start()
-    )
-    try:
-        deadline = time.time() + 90
-        stable_since = None
-        last = -1
-        while time.time() < deadline:
-            time.sleep(1.0)
-            try:
-                n = spark.read.parquet(out_dir).count()
-            except Exception:  # noqa: BLE001 - no batch committed yet
-                continue
-            if n != last:
-                last, stable_since = n, time.time()
-            elif n >= 4956 and time.time() - stable_since > 3:
-                break
-    finally:
-        q.stop()
-        done.set()
-        srv.close()
-
-    got = spark.read.parquet(out_dir)
-    assert got.count() == 4956  # ITDeduplicatorTest.java:92-93
-    assert got.select("identity").distinct().count() == 4956
 
 
 def test_hfp_corpus_resolves_reference_then_sample(tmp_path):

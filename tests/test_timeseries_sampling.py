@@ -7,7 +7,6 @@ import datetime as dt
 from pyspark.sql import functions as F
 
 from transitdata_hfp_deduplicator_spark.operators.sampling import (
-    bernoulli_sample,
     hash_split,
 )
 from transitdata_hfp_deduplicator_spark.operators.timeseries import (
@@ -101,16 +100,6 @@ def test_hash_split_is_deterministic_and_partition_independent(spark):
     assert set(counts) == {"train", "valid", "test"}
     # weights 80/10/10 within a loose tolerance
     assert 700 < counts["train"] < 900
-
-
-def test_bernoulli_sample_reproducible(spark):
-    df = spark.range(0, 10_000)
-    s1 = bernoulli_sample(df, ["id"], 0.1)
-    s2 = bernoulli_sample(df.repartition(17), ["id"], 0.1)
-    ids1 = {r.id for r in s1.collect()}
-    ids2 = {r.id for r in s2.collect()}
-    assert ids1 == ids2  # same rows regardless of partitioning
-    assert 800 < len(ids1) < 1200
 
 
 def test_stratified_quota_shrink_stable_and_partition_invariant(spark):

@@ -1,13 +1,10 @@
-"""MERGE-upsert / CDC-compaction operator semantics."""
+"""MERGE-upsert operator semantics."""
 
 from __future__ import annotations
 
 from pyspark.sql import functions as F
 
-from transitdata_hfp_deduplicator_spark.operators.upsert import (
-    latest_snapshot,
-    merge_upsert,
-)
+from transitdata_hfp_deduplicator_spark.operators.upsert import merge_upsert
 
 
 def test_merge_updates_and_inserts(spark):
@@ -21,28 +18,14 @@ def test_merge_updates_and_inserts(spark):
     assert out == {1: ("a", 10.0), 2: ("B", 99.0), 3: ("c", 30.0), 4: ("d", 40.0)}
 
 
-def test_latest_snapshot_keeps_newest_version(spark):
-    changes = spark.createDataFrame(
-        [
-            (1, 1, "v1"),
-            (1, 3, "v3"),
-            (1, 2, "v2"),
-            (2, 1, "w1"),
-        ],
-        "id long, version long, payload string",
-    )
-    out = {r.id: r.payload for r in latest_snapshot(changes, ["id"], ["version"]).collect()}
-    assert out == {1: "v3", 2: "w1"}
-
-
 def test_cdc_compact_then_merge(spark):
-    """The composed refresh: compact a change stream, upsert into the
-    snapshot — idempotent on re-application."""
+    """The composed refresh: compact a change stream to its latest row
+    per key, upsert into the snapshot — idempotent on re-application."""
     snapshot = spark.createDataFrame([(1, "old"), (2, "old")], "id long, s string")
     changes = spark.createDataFrame(
         [(2, 1, "mid"), (2, 2, "new"), (3, 1, "ins")], "id long, ver long, s string"
     )
-    compacted = latest_snapshot(changes, ["id"], ["ver"]).select("id", "s")
+    compacted = changes.groupBy("id").agg(F.max_by("s", "ver").alias("s"))
     merged = merge_upsert(snapshot, compacted, ["id"])
     once = {(r.id, r.s) for r in merged.collect()}
     twice = {(r.id, r.s) for r in merge_upsert(merged, compacted, ["id"]).collect()}

@@ -11,11 +11,15 @@ every capability is declared as a DataFrame / Structured Streaming plan
 so Catalyst + Tungsten pick the physical strategy.
 
 Layout:
+    __main__   — the application: hfp_text source → stream dedup → parquet
+    config     — the env vars the application reads
     session    — tuned SparkSession builder
-    tables     — testdata table loaders / view registration
+    tables     — testdata table loaders
+    sinks      — checkpointed streaming parquet append
     functions/ — digest, text-analysis, vector column expressions
     operators/ — dedup (exact + near-dup), joins (as-of), top-k, similarity
-    sources/   — HFP fixture parsing, message-envelope schema
+    sources/   — HFP line parsing, the ``hfp_text`` source the app reads,
+                 message-envelope schema + typed canonicalization
     streaming/ — stateful streaming dedup, feed-health listener + alerts
     plans/     — plan-inspection helpers (pushdown / broadcast asserts)
     queries    — the declared query registry (driver contract)

@@ -65,16 +65,6 @@ def cosine(a: Column, b: Column) -> Column:
     return dot(a, b) / (norm2(a) * norm2(b))
 
 
-def l2_distance(a: Column, b: Column) -> Column:
-    return F.sqrt(
-        F.aggregate(
-            F.zip_with(a, b, lambda x, y: (x - y) * (x - y)),
-            F.lit(0.0),
-            lambda acc, x: acc + x,
-        )
-    )
-
-
 def scale(a: Column, s: Column | float) -> Column:
     s_c = F.lit(s) if isinstance(s, (int, float)) else s
     return F.transform(a, lambda x: x * s_c)

@@ -8,7 +8,7 @@ from __future__ import annotations
 
 from collections.abc import Sequence
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window as W
 
@@ -68,58 +68,3 @@ def asof_join(
         *[F.col(f"__match.{c}").alias(f"{c}{suffix}") for c in rv],
     )
     return out
-
-
-def range_join(
-    left: DataFrame,
-    right: DataFrame,
-    equi: Sequence[tuple[str, str]],
-    condition: Column,
-    how: str = "inner",
-) -> DataFrame:
-    """Equi-prefixed range/theta join.
-
-    The equi keys let Catalyst plan a hash/sort-merge join and apply
-    ``condition`` as a post-join residual; with no equi keys it degrades
-    to BroadcastNestedLoopJoin — acceptable only when one side is small,
-    which callers must guarantee (at 100 TB, bucketize the range key
-    into an equi key first — see ``bucketed_range_join``).
-    """
-    cond = condition
-    for lc, rc in equi:
-        cond = (left[lc] == right[rc]) & cond
-    return left.join(right, cond, how)
-
-
-def bucketed_range_join(
-    left: DataFrame,
-    right: DataFrame,
-    left_point: Column | str,
-    right_lo: Column | str,
-    right_hi: Column | str,
-    bucket_width: Column,
-    extra_equi: Sequence[tuple[str, str]] = (),
-) -> DataFrame:
-    """Point-in-interval join without a nested-loop plan.
-
-    Buckets the point and explodes each interval over the buckets it
-    spans, turning the range predicate into an equi join on bucket id +
-    a residual filter — the standard trick for making interval joins
-    shuffle-partitionable at scale.  ``bucket_width`` must be >= the
-    typical interval width or the explode factor grows.
-    """
-    lp = F.col(left_point) if isinstance(left_point, str) else left_point
-    rlo = F.col(right_lo) if isinstance(right_lo, str) else right_lo
-    rhi = F.col(right_hi) if isinstance(right_hi, str) else right_hi
-
-    lb = left.withColumn("__bucket", F.floor(lp / bucket_width))
-    rb = right.withColumn(
-        "__bucket",
-        F.explode(
-            F.sequence(F.floor(rlo / bucket_width), F.floor(rhi / bucket_width))
-        ),
-    )
-    cond = (lb["__bucket"] == rb["__bucket"]) & (lp >= rlo) & (lp <= rhi)
-    for lc, rc in extra_equi:
-        cond = cond & (lb[lc] == rb[rc])
-    return lb.join(rb, cond, "inner").drop("__bucket")

@@ -24,25 +24,6 @@ import pandas as pd
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql import types as T
-
-MEDIA_SCHEMA = T.StructType(
-    [
-        T.StructField("media_id", T.LongType(), False),
-        T.StructField("media_type", T.StringType(), True),  # image|audio|video
-        T.StructField("content", T.BinaryType(), True),
-        T.StructField(
-            "meta",
-            T.StructType(
-                [
-                    T.StructField("source", T.StringType(), True),
-                    T.StructField("n_bytes", T.LongType(), True),
-                ]
-            ),
-            True,
-        ),
-    ]
-)
 
 DECODED_FIELDS = "media_id long, media_type string, width int, height int, n_frames int, feature array<float>"
 

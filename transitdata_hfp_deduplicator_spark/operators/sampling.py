@@ -8,9 +8,9 @@ bucket ranges to named splits.  The same arithmetic is trivially
 expressible in any engine (the DuckDB oracle runs the identical
 formula), which is exactly the property you want for split audits.
 
-Also provided: ``bernoulli_sample`` (seeded, partition-independent —
-unlike ``DataFrame.sample`` whose output depends on partitioning) and
-``stratified_counts`` for verifying split balance per stratum.
+Also provided: ``stratified_counts`` for verifying split balance per
+stratum, ``stratified_quota_sample`` (bottom-k by key hash per
+stratum), ``sharded_prefix_sum`` and ``systematic_pps_sample``.
 
 Scale notes: pure narrow projections — no shuffle, no RNG
 synchronization; the split predicate pushes into the scan like any
@@ -63,17 +63,6 @@ def hash_split(
     last = F.lit(splits[-1][0])
     split = last if expr is None else expr.otherwise(last)
     return df.withColumn("split", split)
-
-
-def bernoulli_sample(
-    df: DataFrame,
-    key_cols: Sequence[str | Column],
-    fraction: float,
-    modulus: int = 1_000_000,
-) -> DataFrame:
-    """Keep ~``fraction`` of rows, chosen by key hash — reproducible
-    regardless of partitioning (unlike ``DataFrame.sample``)."""
-    return df.filter(hash_bucket(key_cols, modulus) < int(fraction * modulus))
 
 
 def stratified_counts(

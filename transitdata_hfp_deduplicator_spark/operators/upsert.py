@@ -14,8 +14,6 @@ from __future__ import annotations
 from collections.abc import Sequence
 
 from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
-from pyspark.sql.window import Window as W
 
 
 def merge_upsert(
@@ -28,21 +26,3 @@ def merge_upsert(
     keys = list(keys)
     kept = target.join(updates.select(*keys), keys, "left_anti")
     return kept.unionByName(updates.select(*target.columns))
-
-
-def latest_snapshot(
-    changes: DataFrame,
-    keys: Sequence[str],
-    version_cols: Sequence[str],
-) -> DataFrame:
-    """Collapse a change stream to its latest row per key (CDC compact):
-    max_by over the version order — map-side combinable, the same
-    partial-aggregation shape as dedup_exact but keeping the LAST."""
-    keys, version_cols = list(keys), list(version_cols)
-    latest = F.max_by(
-        F.struct(*[F.col(c) for c in changes.columns]),
-        F.struct(*[F.col(c) for c in version_cols]),
-    ).alias("__latest")
-    return changes.groupBy(*keys).agg(latest).select(
-        *[F.col(f"__latest.{c}").alias(c) for c in changes.columns]
-    )

@@ -5767,6 +5767,12 @@ def _exact_flag_percentiles(li: DataFrame) -> DataFrame:
     §2.3), window cumsum over 6 small (flag, column) partitions, and a
     broadcast join of the 15 rank targets that picks 1-2 rows each.
 
+    Rows: one per flag with at least one non-NULL value in either
+    column; a flag whose two columns are all NULL has no row.  A column
+    with no non-NULL value in a flag's group reads as an array of NULLs
+    (``F.percentile`` gives a NULL scalar there).  Elsewhere the arrays
+    equal ``F.percentile``'s.
+
     Bit-identical to Catalyst Percentile.getPercentile on DOUBLE
     columns, reproducing its exact arithmetic:
       position  = p * (N-1)                               (double)
@@ -5909,8 +5915,10 @@ def q_agg_approx_check(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.percentile_approx("l_quantity", [0.5, 0.99], 10000).alias("a_qty"),
         F.max("l_quantity").alias("x_qty_max"),
     )
+    # left: the percentiles have no row for a flag whose two columns are
+    # all NULL, and that flag's group must not drop out
     agg = exact.join(F.broadcast(sketch), "l_returnflag").join(
-        F.broadcast(_exact_flag_percentiles(li)), "l_returnflag"
+        F.broadcast(_exact_flag_percentiles(li)), "l_returnflag", "left"
     )
     pct = 3 * 0.05  # 3 sigma at default rsd
     pct_parts = 3 * 0.01

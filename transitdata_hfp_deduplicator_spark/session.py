@@ -90,11 +90,11 @@ def get_spark(
         # window (BENCH_r03 recorded "parsed": null) — keep stdout clean.
         .config("spark.ui.showConsoleProgress", "false")
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
-        # saveAsTable (bucketed-layout writes, sinks.write_bucketed)
-        # must not litter ./spark-warehouse in the repo — park the
-        # default warehouse in a throwaway dir.  Real deployments set
-        # this to the lake path; table writers can also pass an
-        # explicit path per table.
+        # saveAsTable (the bucketed-layout writes in
+        # tests/test_scale_patterns.py) must not litter ./spark-warehouse
+        # in the repo — park the default warehouse in a throwaway dir.
+        # Real deployments set this to the lake path; table writers can
+        # also pass an explicit path per table.
         .config("spark.sql.warehouse.dir", _default_warehouse())
     )
     for k, v in (extra_conf or {}).items():

@@ -1,26 +1,22 @@
-"""The message-envelope data model (SURVEY.md §1.1).
+"""The message-envelope data model (SURVEY.md §1.1) and the typed
+canonicalization path over it (reference A3).
 
 The reference's unit of data is a Pulsar ``Message<byte[]>``: payload
 bytes + key + eventTime + string properties (Deduplicator.java:117-123
 forwards exactly these four).  The Spark-native shape is one DataFrame
-row per message — identical to the built-in Kafka source's schema, so a
-real broker source drops in without touching any operator:
+row per message — the built-in Kafka source's schema, with the headers
+as a ``properties`` map.
 
-    spark.readStream.format("kafka")...           # or pulsar connector
-         .select(col("key").cast("string"),
-                 col("value"),
-                 col("timestamp").alias("event_time"),
-                 ...headers → properties map)
-
-No broker is available in this environment, so constructors here build
-envelope frames from files / rows; everything downstream (dedup,
-analytics) is source-agnostic.
+No broker or connector jar ships with this project and the application
+reads ``hfp_text`` lines, so envelope frames are built from rows
+(``envelope_from_rows``).  ``with_envelope_canonical`` is the realized
+A3 projection: per-row schema tag → typed protobuf decode → canonical
+re-encode, raw bytes on any failure.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 ENVELOPE_SCHEMA = T.StructType(
@@ -32,33 +28,9 @@ ENVELOPE_SCHEMA = T.StructType(
     ]
 )
 
-# property keys carrying the per-message schema tag
+# property key carrying the per-message schema tag
 # (TransitdataSchema.parseFromPulsarMessage; ITDeduplicatorTest.java:67-68)
-KEY_SCHEMA_VERSION = "schema-version"
 KEY_PROTOBUF_SCHEMA = "protobuf-schema"
-
-# whitelisted schema names (Deduplicator.java:76-80); anything else —
-# including PassengerCount, whose typed parse throws and is swallowed
-# (Deduplicator.java:86-93,104) — is deduped on raw payload bytes
-KNOWN_SCHEMAS = ("MqttRawMessage", "HfpData", "PassengerCount")
-CANONICALIZABLE_SCHEMAS = ("MqttRawMessage", "HfpData")
-
-
-def canonical_payload(value=None, properties=None):
-    """The canonicalization projection (A3, Deduplicator.java:69-106) as
-    a pure Column expression — the relational skeleton of the dispatch.
-
-    The reference decodes+re-encodes protobuf because protobuf byte
-    order is nondeterministic; any failure falls back to raw bytes.
-    This column-level form keeps the whitelist dispatch in the JVM but
-    passes tagged payloads through unchanged (a Column cannot run the
-    byte-level codec); use :func:`with_envelope_canonical` for the full
-    typed decode→re-encode path.
-    """
-    value = F.col("value") if value is None else value
-    properties = F.col("properties") if properties is None else properties
-    tag = properties.getItem(KEY_PROTOBUF_SCHEMA)
-    return F.when(tag.isin(*CANONICALIZABLE_SCHEMAS), value).otherwise(value)
 
 
 def canonicalize_tagged_payload(value, tag):

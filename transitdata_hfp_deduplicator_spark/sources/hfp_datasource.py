@@ -5,15 +5,15 @@ DataSource API): ``spark.read.format("hfp_text")`` yields parsed
 first space ends the timestamp, first '{' starts the payload, because
 topics may contain spaces).
 
-This is the engine's "own connector" surface: where `sources/broker.py`
-maps an EXISTING source's columns, this registers a NEW format with the
-planner.  Splits are byte ranges with the Hadoop text-input boundary
-rule (a range owns the lines that START inside it; the first partial
-line belongs to the predecessor), so parallelism scales with file size
-and no central line index is needed — the same contract that lets a
-1000-executor cluster scan a 100 TB text dump.  The stream reader uses
-the same rule from its offset to the byte after the file's last
-newline, so its offsets always bound whole lines.
+This is the engine's own connector: it registers a new format with the
+planner, and the application reads its input through it.  Splits are
+byte ranges with the Hadoop text-input boundary rule (a range owns the
+lines that START inside it; the first partial line belongs to the
+predecessor), so parallelism scales with file size and no central line
+index is needed — the same contract that lets a 1000-executor cluster
+scan a 100 TB text dump.  The stream reader uses the same rule from its
+offset to the byte after the file's last newline, so its offsets always
+bound whole lines.
 """
 
 from __future__ import annotations
@@ -21,16 +21,11 @@ from __future__ import annotations
 import os
 from collections.abc import Iterator
 
-import uuid
-from dataclasses import dataclass
-
 from pyspark.sql.datasource import (
     DataSource,
     DataSourceReader,
-    DataSourceStreamWriter,
     InputPartition,
     SimpleDataSourceStreamReader,
-    WriterCommitMessage,
 )
 
 
@@ -42,14 +37,17 @@ class HfpByteRange(InputPartition):
 
 
 def parse_hfp_line(line: str) -> tuple[str, str, str]:
-    """ts topic json — identical semantics to hfp.parse_lines (the
-    column-expression twin); a line with no space or no '{' degrades to
-    empty fields rather than erroring, like the raw-bytes fallback."""
+    """ts topic json, exactly as ``hfp.parse_lines`` (the column-expression
+    twin) splits it, on every line.  With Spark's ``substring`` clamping
+    spelled out: the timestamp is everything before the first space
+    (empty if none); the topic is what lies between that space and the
+    first '{' with spaces trimmed (empty unless the '{' comes later);
+    the payload runs from the first '{', or is the whole line if there
+    is none.  So a malformed line keeps its text in its identity."""
     sp = line.find(" ")
     brace = line.find("{")
-    if sp < 0 or brace < 0 or brace < sp:
-        return line, "", ""
-    return line[:sp], line[sp + 1 : brace].strip(), line[brace:]
+    topic = line[sp + 1 : brace].strip(" ") if brace > sp + 1 else ""
+    return line[: max(sp, 0)], topic, line[max(brace, 0) :]
 
 
 def read_lines(path: str, start: int, end: int) -> Iterator[tuple]:
@@ -97,27 +95,14 @@ class HfpTextReader(DataSourceReader):
         self.n_splits = int(options.get("numPartitions", "8"))
 
     def partitions(self):
-        if os.path.isdir(self.path):  # a sink-written batch dir of parts
-            files = sorted(
-                os.path.join(self.path, f)
-                for f in os.listdir(self.path)
-                if not f.startswith((".", "_"))
-                and os.path.isfile(os.path.join(self.path, f))
-            )
-        else:
-            files = [self.path]
-        total = sum(os.path.getsize(f) for f in files)
-        if total == 0:
-            return [HfpByteRange(files[0] if files else self.path, 0, 0)]
-        step = max(1, (total + self.n_splits - 1) // self.n_splits)
-        parts = []
-        for f in files:
-            size = os.path.getsize(f)
-            parts.extend(
-                HfpByteRange(f, s, min(s + step, size))
-                for s in range(0, size, step)
-            )
-        return parts
+        size = os.path.getsize(self.path)
+        if size == 0:
+            return [HfpByteRange(self.path, 0, 0)]
+        step = max(1, (size + self.n_splits - 1) // self.n_splits)
+        return [
+            HfpByteRange(self.path, s, min(s + step, size))
+            for s in range(0, size, step)
+        ]
 
     def read(self, partition: HfpByteRange) -> Iterator[tuple]:
         return read_lines(partition.path, partition.start, partition.end)
@@ -158,57 +143,6 @@ class HfpTextStreamReader(SimpleDataSourceStreamReader):
         pass  # nothing to release; the file is the retention
 
 
-@dataclass
-class _StagedFile(WriterCommitMessage):
-    staged: str
-    rows: int
-
-
-class HfpTextStreamWriter(DataSourceStreamWriter):
-    """Streaming sink half of the format: serialize rows back to
-    ``ts topic json`` lines — the reference's forward-to-output-topic
-    (A7, Deduplicator.java:117-129) with STRONGER delivery semantics.
-    Each task writes to a staged file; ``commit`` moves the batch's
-    staged files into ``<dir>/batch=<id>/`` only after every task
-    reported success, and a replayed batch OVERWRITES its own directory
-    — write-ahead staging + idempotent rename = exactly-once into the
-    file sink, where the reference acked after async-send *initiation*
-    and could both drop (send failed, already acked) and re-emit."""
-
-    def __init__(self, options):
-        self.dir = options.get("path")
-        if not self.dir:
-            raise ValueError("hfp_text sink requires .option('path', ...)")
-
-    def write(self, iterator) -> _StagedFile:
-        os.makedirs(os.path.join(self.dir, "_staging"), exist_ok=True)
-        staged = os.path.join(self.dir, "_staging", uuid.uuid4().hex)
-        n = 0
-        with open(staged, "w", encoding="utf-8") as f:
-            for row in iterator:
-                f.write(f"{row.server_ts} {row.topic} {row.payload}\n")
-                n += 1
-        return _StagedFile(staged=staged, rows=n)
-
-    def commit(self, messages, batchId: int) -> None:
-        import shutil
-
-        batch_dir = os.path.join(self.dir, f"batch={batchId}")
-        if os.path.isdir(batch_dir):  # replayed batch: idempotent redo
-            shutil.rmtree(batch_dir)
-        os.makedirs(batch_dir)
-        for i, m in enumerate(messages):
-            if m is not None and m.rows > 0:
-                os.replace(m.staged, os.path.join(batch_dir, f"part-{i:05d}.txt"))
-            elif m is not None:
-                os.unlink(m.staged)
-
-    def abort(self, messages, batchId: int) -> None:
-        for m in messages:
-            if m is not None and os.path.exists(m.staged):
-                os.unlink(m.staged)
-
-
 class HfpTextDataSource(DataSource):
     @classmethod
     def name(cls) -> str:
@@ -222,10 +156,3 @@ class HfpTextDataSource(DataSource):
 
     def simpleStreamReader(self, schema) -> HfpTextStreamReader:
         return HfpTextStreamReader(self.options)
-
-    def streamWriter(self, schema, overwrite: bool) -> HfpTextStreamWriter:
-        return HfpTextStreamWriter(self.options)
-
-
-def register(spark) -> None:
-    spark.dataSource.register(HfpTextDataSource)

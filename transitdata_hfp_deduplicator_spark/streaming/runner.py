@@ -191,7 +191,6 @@ def scoped_conf(spark: SparkSession, key: str, value: str):
             spark.conf.set(key, old)
 
 
-@contextlib.contextmanager
 def scoped_shuffle_partitions(spark: SparkSession, n: int):
     """Temporarily set the shuffle-partition count for a streaming
     query's lifetime.
@@ -203,10 +202,4 @@ def scoped_shuffle_partitions(spark: SparkSession, n: int):
     size — this scopes the choice to one query instead of mutating the
     session-wide default.
     """
-    key = "spark.sql.shuffle.partitions"
-    old = spark.conf.get(key)
-    spark.conf.set(key, str(n))
-    try:
-        yield
-    finally:
-        spark.conf.set(key, old)
+    return scoped_conf(spark, "spark.sql.shuffle.partitions", str(n))

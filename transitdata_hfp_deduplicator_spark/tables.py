@@ -28,8 +28,6 @@ TABLE_NAMES = (
     "embeddings",
 )
 
-DEFAULT_SF_DIR = "/root/testdata/sf0.001"
-
 
 def read_parquet(spark: SparkSession, path: str) -> DataFrame:
     """Parquet read that tolerates TIMESTAMP(NANOS) columns.
@@ -101,13 +99,3 @@ def table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     if name not in TABLE_NAMES:
         raise KeyError(f"unknown table {name!r}; expected one of {TABLE_NAMES}")
     return read_parquet(spark, os.path.join(sf_dir, f"{name}.parquet"))
-
-
-def load_tables(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
-    return {name: table(spark, sf_dir, name) for name in TABLE_NAMES}
-
-
-def register_views(spark: SparkSession, sf_dir: str) -> None:
-    """Register every table as a temp view (for the SQL API path)."""
-    for name in TABLE_NAMES:
-        table(spark, sf_dir, name).createOrReplaceTempView(name)
