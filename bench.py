@@ -5,7 +5,7 @@ Runs every declared query at ``$SPARK_GRAFT_SF_DIR`` (default
 JSON lines: first the per-query detail ``{"detail": "per_query_sec",
 "queries": {name: sec}}``, then a compact (<200 char) FINAL line
 ``{"metric": ..., "value": total_sec, "unit": "sec", "sf": ...,
-"calib_sec": ..., "n_queries": ...}`` — split so a tail-capture of
+"calib_sec": ..., "n_queries": ..., "n_errors": ...}`` — split so a tail-capture of
 stdout's last ~2000 chars always contains the parseable summary (the
 90+-entry queries dict alone is ~2.4 kB).  The detail line is ALSO
 written to ``BENCH_detail.json`` next to this file, so all 134
@@ -56,6 +56,8 @@ def format_output(timings: dict, sf, calib, retries=None,
         "calib_sec": calib,
         "calib_probe": CALIB_PROBE,
         "n_queries": len(timings),
+        # failed queries (timed -1.0), the ones the total leaves out
+        "n_errors": sum(1 for t in timings.values() if t < 0),
     }
     if retries:
         dd["retries"] = retries

@@ -54,7 +54,6 @@ SLOW_TESTS = {
     "test_similarity.py::test_incremental_lsh_matches_full_batch_verdicts",
     "test_similarity.py::test_rplsh_recall_on_clustered_data",
     "test_corpus_ops.py::test_curate_and_seqpack_engine_parity_on_whitespace_runs",
-    "test_kmeans.py::test_blas_kernel_agrees_with_fold",
     "test_kmeans.py::test_trained_ivf_recall_on_clustered_data",
     "test_clusters.py::test_large_small_star_random_graphs",
     "test_clusters.py::test_large_small_star_deep_chain",

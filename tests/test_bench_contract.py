@@ -35,8 +35,19 @@ def test_final_line_is_last_and_detail_precedes():
 
 
 def test_failed_queries_excluded_from_total():
-    _, final = format_output({"q_a": 2.0, "q_b": -1.0}, 0.1, 0.4)
+    _, final = format_output({"q_a": 2.0, "q_b": -1.0, "q_c": -1.0}, 0.1, 0.4)
     assert json.loads(final)["value"] == 2.0
+    assert json.loads(final)["n_errors"] == 2
+    _, clean = format_output({"q_a": 2.0}, 0.1, 0.4)
+    assert json.loads(clean)["n_errors"] == 0
+    # a full sweep with three-digit error and two-digit retry counts
+    # stays tail-parseable
+    names = sorted(QUERIES)
+    timings = {q: (-1.0 if i < 100 else 1234.5678) for i, q in enumerate(names)}
+    retries = {q: {"sec": 9.0, "retry_sec": 1.0, "transient": True} for q in names[-10:]}
+    _, final = format_output(timings, 0.1, 3.0512, retries=retries)
+    assert json.loads(final)["n_errors"] == 100
+    assert len(final) < 200, f"final line {len(final)} chars"
 
 
 def test_calibrate_median_sheds_cold_run_and_outlier():

@@ -222,6 +222,27 @@ def test_missing_path_option_raises(spark):
         spark.read.format("hfp_text").load().count()
 
 
+def test_line_split_parity_with_read_corpus(spark, tmp_path):
+    """hfp.read_corpus splits a file into lines exactly as the app's
+    hfp_text reader does: only at '\n', trailing '\r' stripped, empty
+    lines skipped."""
+    p = tmp_path / "line-endings.txt"
+    p.write_bytes(
+        b'1 /hfp/a {"VP":{"veh":1}}\r\n'  # CRLF
+        b'2 /hfp/b {"VP":{"desi":"x\ry"}}\n'  # bare \r inside the payload
+        b'3 /hfp/c {"VP":{"veh":3}}\r\r\n'
+        b'4 /hfp/d {"VP":{"veh":4}}\n'
+        b"\r\n"
+        b'5 /hfp/e {"VP":{"veh":5}}'  # no final newline
+    )
+    via_ds = sorted(map(tuple, _load(spark, str(p)).collect()))
+    via_corpus = sorted(map(tuple, read_corpus(spark, str(p)).collect()))
+    assert via_corpus == via_ds
+    assert [r[0] for r in via_ds] == ["1", "2", "3", "4", "5"]
+    assert ("2", "/hfp/b", '{"VP":{"desi":"x\ry"}}') in via_ds
+    assert all(not r[2].endswith("\r") for r in via_ds)
+
+
 def test_parse_parity_on_adversarial_lines(spark):
     """parse_hfp_line (Python, DataSource) vs hfp.parse_lines (SQL
     expressions) agree on every line, malformed ones included — two

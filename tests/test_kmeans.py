@@ -104,29 +104,6 @@ def test_trained_ivf_recall_on_clustered_data(spark):
     assert recall >= 0.95, f"trained-IVF nprobe=2 recall {recall}"
 
 
-def test_blas_kernel_agrees_with_fold(spark):
-    """The two kernels differ only in float summation order; on real
-    data the round-6 argmax verdicts must coincide (a disagreement
-    would need two centroids within 1e-6 of the same similarity)."""
-    e = _clustered(spark, n=300)
-    a_fold, c_fold = kmeans_cells(e, k=10, iters=2, kernel="fold")
-    a_blas, c_blas = kmeans_cells(e, k=10, iters=2, kernel="blas")
-    assert {(r.vid, r.cell) for r in a_fold.collect()} == {
-        (r.vid, r.cell) for r in a_blas.collect()
-    }
-    from transitdata_hfp_deduplicator_spark.operators.kmeans import (
-        ivf_topk_trained,
-    )
-    q = e.filter(F.col("vec_id") % 100 == 7).select(
-        F.col("vec_id").alias("q_id"), F.col("embedding").alias("q_vec")
-    )
-    fold = {(r.q_id, r.item_id, r.rank) for r in ivf_topk_trained(
-        e, q, k=5, nprobe=2, n_cells=10, iters=2, kernel="fold").collect()}
-    blas = {(r.q_id, r.item_id, r.rank) for r in ivf_topk_trained(
-        e, q, k=5, nprobe=2, n_cells=10, iters=2, kernel="blas").collect()}
-    assert fold == blas
-
-
 def test_incr_semdedup_new_judged_history_untouched(spark):
     """Incremental SemDeDup: a new exact copy of a history vector must
     be verdicted against it; a new copy of a LATER new vector must

@@ -115,6 +115,23 @@ def test_config_defaults_and_env_override(monkeypatch):
     assert cfg2.duplicate_ratio_threshold == 0.5
 
 
+@pytest.mark.parametrize(
+    "value,expected",
+    [("true", True), ("yes", True), ("on", True),
+     ("false", False), ("no", False), ("off", False)],
+)
+def test_alert_on_threshold_reads_hocon_booleans(monkeypatch, value, expected):
+    monkeypatch.setenv("APPLICATION_ALERT_ON_THRESHOLD", value)
+    assert DedupConfig().alert_on_threshold is expected
+
+
+@pytest.mark.parametrize("value", ["True", "1", "enabled", ""])
+def test_alert_on_threshold_rejects_other_values(monkeypatch, value):
+    monkeypatch.setenv("APPLICATION_ALERT_ON_THRESHOLD", value)
+    with pytest.raises(ValueError, match="APPLICATION_ALERT_ON_THRESHOLD"):
+        DedupConfig()
+
+
 # ratio -> (alert with alert_on_threshold, alert without), at the
 # default threshold 0.97; both edges are exclusive
 BAND = {

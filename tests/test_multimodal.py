@@ -49,15 +49,6 @@ def test_resize_noop_when_within_bounds(decoded):
     assert all(not r.needs_resize for r in big)
 
 
-def test_resize_real_codec_seam_raises(decoded):
-    from py4j.protocol import Py4JJavaError
-    from pyspark.errors.exceptions.captured import PythonException
-
-    df = resize_media(decoded, max_side=8, real_codec=True)
-    with pytest.raises((PythonException, Py4JJavaError)):
-        df.filter(F.col("needs_resize")).limit(1).collect()
-
-
 def test_frame_sample_indices(decoded):
     frames = frame_sample(decoded, every_nth=2).collect()
     for r in frames:

@@ -48,7 +48,6 @@ def _batch_reference_hits(spark, docs, num_hashes=16, bands=8):
         "text",
         shingle_n=3,
         num_hashes=num_hashes,
-        hash_family="md5",
     ).filter(F.col("mh_0").isNotNull())
     keyed = sigs.select(
         "doc_id",

@@ -309,7 +309,7 @@ def test_minhash_family_matches_pure_python(spark, texts):
             else tuple(r[f"mh_{k}"] for k in range(16))
         )
         for r in minhash_signatures(
-            df, "doc_id", "text", shingle_n=3, num_hashes=16, hash_family="md5"
+            df, "doc_id", "text", shingle_n=3, num_hashes=16
         ).collect()
     }
     for i, t in enumerate(texts):

@@ -284,13 +284,9 @@ def test_incremental_lsh_matches_full_batch_verdicts(spark, sf_dir):
     new = d.filter(F.col("doc_id") >= cut)
     got = {
         (r.doc_id, r.is_dup, r.dup_of, r.jaccard)
-        for r in minhash_lsh_incremental(
-            new, hist, "doc_id", "text", hash_family="md5"
-        ).collect()
+        for r in minhash_lsh_incremental(new, hist, "doc_id", "text").collect()
     }
-    pairs = minhash_lsh_pairs(
-        d, "doc_id", "text", threshold=0.5, hash_family="md5"
-    ).collect()
+    pairs = minhash_lsh_pairs(d, "doc_id", "text", threshold=0.5).collect()
     best: dict = {}
     for p in pairs:
         if p.j >= cut:  # full run orders i<j, so i is the earlier partner

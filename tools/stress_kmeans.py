@@ -57,7 +57,7 @@ def main() -> None:
     emb.write.format("noop").mode("overwrite").save()  # warm
 
     t0 = time.time()
-    assigned, cents = kmeans_cells(emb, k=k, iters=iters, kernel="blas")
+    assigned, cents = kmeans_cells(emb, k=k, iters=iters)
     n_cells = cents.count()  # forces training (checkpointed per round)
     t_train = time.time() - t0
 
@@ -66,15 +66,13 @@ def main() -> None:
         F.col("vec_id").alias("q_id"), F.col("embedding").alias("q_vec")
     )
     t0 = time.time()
-    top1 = ivf_topk_trained(
-        emb, q, k=1, nprobe=2, n_cells=k, iters=iters, kernel="blas"
-    )
+    top1 = ivf_topk_trained(emb, q, k=1, nprobe=2, n_cells=k, iters=iters)
     hits = top1.filter(F.col("q_id") == F.col("item_id")).count()
     total = q.count()
     t_query = time.time() - t0
     print(
         f"vecs={n} k={k} iters={iters}: train {t_train:.1f}s "
-        f"({n * iters / t_train / 1e6:.2f}M vec-rows/iter-s), live cells "
+        f"({n * iters / t_train / 1e3:.1f}k vec-rows/iter-s), live cells "
         f"{n_cells}/{k} | trained-IVF recall@1={hits}/{total} "
         f"(end-to-end retrain+probe {t_query:.1f}s)"
     )

@@ -1,5 +1,5 @@
 """Scale stress for SemDeDup (q_dedup_semantic's operator) at the
-1M-embedding corpus: train cells with the blas k-means kernel, run the
+1M-embedding corpus: train cells with the k-means trainer, run the
 per-cell row-blocked GEMM prune, and report planted-pair recall, false
 positives, and wall time.
 
@@ -82,7 +82,7 @@ def main() -> None:
 
     t0 = time.time()
     assigned, _ = kmeans_cells(
-        emb, k=k, iters=2, id_col="vec_id", vec_col="embedding", kernel="blas"
+        emb, k=k, iters=2, id_col="vec_id", vec_col="embedding"
     )
     t_train = time.time() - t0
     t0 = time.time()

@@ -95,8 +95,7 @@ def main() -> None:
 
     t0 = time.time()
     assigned_h, cents = kmeans_cells(
-        hist, k=k, iters=2, id_col="vec_id", vec_col="embedding",
-        kernel="blas",
+        hist, k=k, iters=2, id_col="vec_id", vec_col="embedding"
     )
     t_train = time.time() - t0
     t0 = time.time()

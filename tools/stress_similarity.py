@@ -1,7 +1,8 @@
 """Scale stress for the near-dup path: synthesize an N-doc corpus with
 planted near-duplicates (pure Spark expressions, no testdata), run
-MinHash signatures and the full LSH candidate+verify pipeline at the
-production setting (xxhash64 family), and print throughput.
+MinHash signatures and the full LSH candidate+verify pipeline (the
+md5 Kirsch-Mitzenmacher signature family the registry queries run), and
+print throughput.
 
 The evidence this produces: signature generation is map-only and scales
 with doc count; candidate generation shuffles only band buckets; verify

@@ -20,6 +20,23 @@ def _env(name: str, default: str) -> str:
     return os.environ.get(name, default)
 
 
+# HOCON's string-to-boolean conversion (Typesafe Config): exact,
+# case-sensitive words; anything else is a type error, never false
+_HOCON_BOOLEANS = {
+    "true": True, "yes": True, "on": True,
+    "false": False, "no": False, "off": False,
+}
+
+
+def _env_bool(name: str, default: str) -> bool:
+    value = _env(name, default)
+    if value not in _HOCON_BOOLEANS:
+        raise ValueError(
+            f"{name}={value!r} is not a boolean: use true/yes/on or false/no/off"
+        )
+    return _HOCON_BOOLEANS[value]
+
+
 @dataclass(frozen=True)
 class DedupConfig:
     # state TTL (environment.conf:24 — "4 hours"; enforced here)
@@ -35,5 +52,5 @@ class DedupConfig:
         default_factory=lambda: float(_env("APPLICATION_ALERT_RATIO_THRESHOLD", "0.97"))
     )
     alert_on_threshold: bool = field(
-        default_factory=lambda: _env("APPLICATION_ALERT_ON_THRESHOLD", "true") == "true"
+        default_factory=lambda: _env_bool("APPLICATION_ALERT_ON_THRESHOLD", "true")
     )

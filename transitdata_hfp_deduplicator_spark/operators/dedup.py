@@ -73,7 +73,6 @@ def dedup_exact(
     df: DataFrame,
     identity_cols: Sequence[str],
     order_cols: Sequence[str],
-    use_window: bool = False,
 ) -> DataFrame:
     """First-occurrence-wins exact dedup (reference A4+A5, batch form).
 
@@ -82,21 +81,12 @@ def dedup_exact(
     order within an identity group (append a unique id) or "first" is
     nondeterministic.
 
-    Default plan: ``groupBy(identity).agg(min(struct(order, rest)))`` —
-    partial-aggregates map-side, shuffles ~unique rows.
-    ``use_window=True`` keeps the row_number() formulation (useful when
-    per-duplicate columns must survive for later stats).
+    Plan: ``groupBy(identity).agg(min_by(row, order))`` —
+    partial-aggregates map-side, shuffles ~unique rows.  (The
+    row_number() formulation lives in ``with_dup_rank``, where every
+    duplicate must survive with its own delay.)
     Output column order matches the input.
     """
-    identity_cols = list(identity_cols)
-    order_cols = list(order_cols)
-    if use_window:
-        w = Window.partitionBy(*identity_cols).orderBy(*order_cols)
-        return (
-            df.withColumn("__rn", F.row_number().over(w))
-            .filter(F.col("__rn") == 1)
-            .drop("__rn")
-        )
     # min_by(row, order) rather than min(struct(order, row)): the struct
     # comparison in min() forces per-row struct allocation + full
     # lexicographic compares; min_by compares only the order key

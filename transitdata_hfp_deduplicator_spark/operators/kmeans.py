@@ -23,12 +23,6 @@ partition order, engine, or RNG state:
   Lloyd iteration is a (broadcast-joined) scoring pass plus a map-side
   combinable ``max_by`` re-assignment and a per-dimension mean — no
   driver loop state, no collect; ``iters`` is config like ``nprobe``.
-* **Two kernels.**  ``fold`` (default) is the oracle-pinned pure-column
-  path above; ``blas`` swaps the scoring pass for a per-Arrow-batch
-  numpy GEMM and the mean for numpy partial sums (measured 7.3s →
-  ~3s per 1M×64 iteration, centroids within 1e-16) — same argmax
-  semantics, float summation order unpinned, so stress/throughput use
-  it and the driver-gated queries don't.
 
 Known trade-off of the hash-mean init: every initial centroid sits near
 the grand mean (bucket means of near-uniform random subsets), so on
@@ -71,64 +65,14 @@ def hash_cell(id_col: Column | str, k: int) -> Column:
     )
 
 
-def _cell_means(assigned: DataFrame, kernel: str = "fold") -> DataFrame:
+def _cell_means(assigned: DataFrame) -> DataFrame:
     """(cell, centroid): element-wise mean per cell.
 
-    ``fold`` (oracle-pinned): posexplode + per-(cell, dim) DECIMAL
-    scalar aggregation — shuffles map-side combined partials, never
-    whole vectors per group (the collect_list rebuild at the end is
-    k×dim rows, trivially small); exact across partial orders/engines.
-
-    ``blas`` (scale path, paired with the blas assignment): one numpy
-    partial (cell, count, sum-vector) per Arrow batch — the shuffle
-    carries ~partitions×k rows instead of n×dim scalars (measured
-    5.1s → 1.1s at 1M×32, centroids within 1e-16); float64 partial
-    sums, so NOT order-exact —
-    same un-pinned contract as the blas assignment.
+    posexplode + per-(cell, dim) DECIMAL scalar aggregation — shuffles
+    map-side combined partials, never whole vectors per group (the
+    collect_list rebuild at the end is k×dim rows, trivially small);
+    exact across partial orders/engines.
     """
-    if kernel == "blas":
-
-        def partial(batches):
-            import numpy as np
-            import pandas as pd
-
-            acc: dict = {}
-            for pdf in batches:
-                cells = pdf["cell"].to_numpy()
-                V = np.asarray(pdf["v"].tolist(), dtype=np.float64)
-                for c in np.unique(cells):
-                    m = cells == c
-                    s, n = V[m].sum(axis=0), int(m.sum())
-                    if int(c) in acc:
-                        s0, n0 = acc[int(c)]
-                        acc[int(c)] = (s0 + s, n0 + n)
-                    else:
-                        acc[int(c)] = (s, n)
-            yield pd.DataFrame(
-                {
-                    "cell": list(acc.keys()),
-                    "s": [v[0].tolist() for v in acc.values()],
-                    "n": [v[1] for v in acc.values()],
-                }
-            )
-
-        partials = assigned.select("cell", "v").mapInPandas(
-            partial, "cell bigint, s array<double>, n long"
-        )
-        # final combine over ~partitions×k tiny rows (each partial row
-        # explodes to one row per dim, carrying its count alongside)
-        return (
-            partials.select("cell", "n", F.posexplode("s"))
-            .groupBy("cell", "pos")
-            .agg((F.sum("col") / F.sum("n")).alias("m"))
-            .groupBy("cell")
-            .agg(
-                F.transform(
-                    F.array_sort(F.collect_list(F.struct("pos", "m"))),
-                    lambda x: x.m,
-                ).alias("centroid")
-            )
-        )
     return (
         assigned.select("cell", F.posexplode("v"))
         .groupBy("cell", "pos")
@@ -147,56 +91,17 @@ def _cell_means(assigned: DataFrame, kernel: str = "fold") -> DataFrame:
     )
 
 
-def _assign(
-    vectors: DataFrame, centroids: DataFrame, kernel: str = "fold"
-) -> DataFrame:
+def _assign(vectors: DataFrame, centroids: DataFrame) -> DataFrame:
     """Re-assign each vector to its round(cosine,6)-argmax centroid.
 
-    ``kernel="fold"`` (default, oracle-pinned): broadcast nested-loop
-    against the tiny centroid table scored with the JVM zip_with/
-    aggregate fold, then ONE map-side-combinable max_by per vector — no
-    window sort, no shuffle of the scored n×k rows beyond the
-    per-vector partial maxima.  Ties (equal rounded similarity) break
-    toward the LOWER cell id via the (sim, -cell) struct ordering — the
-    same verdict as the oracle's ``ORDER BY sim DESC, cell`` row_number.
-
-    ``kernel="blas"`` (scale path): the centroid table — k×dim doubles,
-    KBs by construction — is materialized driver-side under the same
-    bounded-small-side contract as a broadcast, and each Arrow batch
-    scores with one numpy GEMM + argmax (no scored-row explosion at
-    all; measured 64M interpreted fold evaluations → ~30 GEMMs at
-    1M×64 cells).  Same round-6 + lowest-cell tiebreak, but SIMD summation order can differ from the
-    sequential fold in the last ulp, so this kernel is benchmarked, not
-    oracle-pinned — queries default to "fold".
+    Broadcast nested-loop against the tiny centroid table scored with
+    the JVM zip_with/aggregate fold, then ONE map-side-combinable max_by
+    per vector — no window sort, no shuffle of the scored n×k rows
+    beyond the per-vector partial maxima.  Ties (equal rounded
+    similarity) break toward the LOWER cell id via the (sim, -cell)
+    struct ordering — the same verdict as the oracle's ``ORDER BY sim
+    DESC, cell`` row_number.
     """
-    if kernel == "blas":
-        rows = sorted(
-            (int(r.cell), list(r.centroid)) for r in centroids.collect()
-        )
-        cell_ids = [c for c, _ in rows]
-        cmat = [v for _, v in rows]
-
-        def score(batches):
-            import numpy as np
-            import pandas as pd
-
-            ids = np.asarray(cell_ids, dtype=np.int64)
-            C = np.asarray(cmat, dtype=np.float64)  # (k, dim)
-            Cn = C / np.linalg.norm(C, axis=1, keepdims=True)
-            for pdf in batches:
-                V = np.asarray(pdf["v"].tolist(), dtype=np.float64)
-                Vn = V / np.linalg.norm(V, axis=1, keepdims=True)
-                sims = np.round(Vn @ Cn.T, 6)  # (n, k)
-                # argmax takes the FIRST max — cells ascend, so ties
-                # already break toward the lower cell id
-                best = ids[np.argmax(sims, axis=1)]
-                yield pd.DataFrame(
-                    {"vid": pdf["vid"], "v": pdf["v"], "cell": best}
-                )
-
-        return vectors.select("vid", "v").mapInPandas(
-            score, "vid long, v array<double>, cell bigint"
-        )
     scored = vectors.select("vid", "v").join(F.broadcast(centroids)).select(
         "vid",
         "v",
@@ -221,7 +126,6 @@ def kmeans_cells(
     iters: int = 2,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    kernel: str = "fold",
 ) -> tuple[DataFrame, DataFrame]:
     """Train k cells; returns (assignments, centroids).
 
@@ -252,7 +156,7 @@ def kmeans_cells(
     assigned = vecs.withColumn("cell", hash_cell("vid", k))
     centroids = None
     for _ in range(iters):
-        centroids = _cell_means(assigned, kernel=kernel)
+        centroids = _cell_means(assigned)
         # materialize each round: the next iteration's mean AND argmax
         # both consume `assigned`, and downstream consumers (probe +
         # score) fan out again — unchecked, the unrolled lineage
@@ -260,9 +164,7 @@ def kmeans_cells(
         # corpus passes at cluster scale, where one pass is the whole
         # budget).  Lifetime = this plan; the ContextCleaner releases
         # the blocks when the frame is dropped.
-        assigned = _assign(
-            assigned.select("vid", "v", "cell"), centroids, kernel=kernel
-        )
+        assigned = _assign(assigned.select("vid", "v", "cell"), centroids)
         assigned = assigned.localCheckpoint()
     return assigned, centroids
 
@@ -278,7 +180,6 @@ def ivf_topk_trained(
     vec_col: str = "embedding",
     query_id_col: str = "q_id",
     query_vec_col: str = "q_vec",
-    kernel: str = "fold",
 ) -> DataFrame:
     """IVF ANN over LEARNED cells: train k-means, then probe like
     ivf_topk (operators/similarity.py:626) with the trained assignment
@@ -289,8 +190,7 @@ def ivf_topk_trained(
     from pyspark.sql.window import Window as W
 
     assigned, centroids = kmeans_cells(
-        embeddings, k=n_cells, iters=iters, id_col=id_col, vec_col=vec_col,
-        kernel=kernel,
+        embeddings, k=n_cells, iters=iters, id_col=id_col, vec_col=vec_col
     )
     probes = (
         queries.join(F.broadcast(centroids))
@@ -315,60 +215,13 @@ def ivf_topk_trained(
         .filter(F.col("c_rank") <= nprobe)
         .select(query_id_col, query_vec_col, "cell")
     )
-    if kernel == "blas":
-        # in-cell scoring as a per-cell cogroup GEMM: items ship through
-        # Arrow ONCE per cell (never duplicated per query the way the
-        # probes join duplicates them), each group runs one
-        # items×queries matmul and emits only its per-(query, cell)
-        # top-k — the global rank below sees k×nprobe rows per query.
-        topk = k
-
-        def cell_topk(key, items_pdf, probes_pdf):
-            import numpy as np
-            import pandas as pd
-
-            empty = pd.DataFrame(
-                {"q_id": [], "item_id": [], "cos_sim": []}
-            ).astype({"q_id": "int64", "item_id": "int64", "cos_sim": "float64"})
-            if len(items_pdf) == 0 or len(probes_pdf) == 0:
-                return empty
-            V = np.asarray(items_pdf["v"].tolist(), dtype=np.float64)
-            ids = items_pdf["vid"].to_numpy()
-            Q = np.asarray(probes_pdf["q_vec"].tolist(), dtype=np.float64)
-            qids = probes_pdf["q_id"].to_numpy()
-            Vn = V / np.linalg.norm(V, axis=1, keepdims=True)
-            Qn = Q / np.linalg.norm(Q, axis=1, keepdims=True)
-            sims = np.round(Vn @ Qn.T, 6)  # (items, queries)
-            out_q, out_i, out_s = [], [], []
-            for j in range(sims.shape[1]):
-                order = np.lexsort((ids, -sims[:, j]))[:topk]
-                out_q.extend([int(qids[j])] * len(order))
-                out_i.extend(ids[order].tolist())
-                out_s.extend(sims[order, j].tolist())
-            return pd.DataFrame(
-                {"q_id": out_q, "item_id": out_i, "cos_sim": out_s}
-            ).astype({"q_id": "int64", "item_id": "int64", "cos_sim": "float64"})
-
-        pr = probes.select(
-            "cell",
-            F.col(query_id_col).cast("bigint").alias("q_id"),
-            VEC.as_double(F.col(query_vec_col)).alias("q_vec"),
-        )
-        scored = (
-            assigned.groupBy("cell")
-            .cogroup(pr.groupBy("cell"))
-            .applyInPandas(
-                cell_topk, "q_id long, item_id long, cos_sim double"
-            )
-        )
-    else:
-        scored = assigned.join(F.broadcast(probes), on="cell").select(
-            F.col(query_id_col).alias("q_id"),
-            F.col("vid").alias("item_id"),
-            F.round(
-                VEC.cosine(F.col("v"), VEC.as_double(F.col(query_vec_col))), 6
-            ).alias("cos_sim"),
-        )
+    scored = assigned.join(F.broadcast(probes), on="cell").select(
+        F.col(query_id_col).alias("q_id"),
+        F.col("vid").alias("item_id"),
+        F.round(
+            VEC.cosine(F.col("v"), VEC.as_double(F.col(query_vec_col))), 6
+        ).alias("cos_sim"),
+    )
     w = W.partitionBy("q_id").orderBy(F.col("cos_sim").desc(), F.col("item_id"))
     return (
         scored.withColumn("rank", F.row_number().over(w).cast("bigint"))
@@ -452,7 +305,6 @@ def assign_cells(
     centroids: DataFrame,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    kernel: str = "fold",
 ) -> DataFrame:
     """Assign NEW vectors to FROZEN trained centroids — the incremental
     path: centroids come from ``kmeans_cells(history)`` and the new
@@ -469,7 +321,7 @@ def assign_cells(
             VEC.as_double(F.col(vec_col)).alias("v"),
         )
     )
-    return _assign(vecs, centroids, kernel=kernel)
+    return _assign(vecs, centroids)
 
 
 def semdedup_incr_verdicts(

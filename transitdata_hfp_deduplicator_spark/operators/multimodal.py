@@ -8,11 +8,10 @@ Arrow-batched ``mapInPandas`` over the binary column, so each executor
 processes whole record batches with zero JVM<->Python per-row cost and
 the 100 TB layout question reduces to "partition the binary table".
 
-The actual codecs (PIL/librosa/av) are NOT in this environment, so the
-decode kernels are STUBS: a clearly-marked deterministic fake keeps the
+No media codec (PIL/librosa/av) is used, so decoding is a STUB: a
+clearly-marked deterministic fake (``_fake_decode``) keeps the
 Spark-side plumbing (schema, batch iteration, UDF signatures) real and
-testable, and ``NotImplementedError`` marks the seam where a codec
-drops in.
+testable.
 """
 
 from __future__ import annotations
@@ -58,21 +57,15 @@ def _fake_decode(content: bytes) -> tuple[int, int, int, list[float]]:
     return width, height, n_frames, feature
 
 
-def decode_media(df: DataFrame, real_codec: bool = False) -> DataFrame:
+def decode_media(df: DataFrame) -> DataFrame:
     """Decode + feature-extract over the binary column via mapInPandas.
 
-    ``real_codec=True`` is the seam for PIL/librosa/av — it raises
-    NotImplementedError here because the codecs are not available in
-    this environment; the default path uses the deterministic fake so
-    everything downstream of decode is real and tested.
+    Decoding uses the deterministic fake (``_fake_decode``), so
+    everything downstream of decode is real and tested without PIL,
+    librosa or av.
     """
 
     def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        if real_codec:
-            raise NotImplementedError(
-                "real media codecs (PIL/librosa/av) are not available in "
-                "this environment; plug them in here"
-            )
         for pdf in batches:
             decoded = [_fake_decode(c) for c in pdf["content"]]
             yield pd.DataFrame(
@@ -89,21 +82,15 @@ def decode_media(df: DataFrame, real_codec: bool = False) -> DataFrame:
     return df.mapInPandas(kernel, DECODED_FIELDS)
 
 
-def resize_media(
-    decoded: DataFrame,
-    max_side: int = 64,
-    real_codec: bool = False,
-) -> DataFrame:
-    """Aspect-preserving resize planning + (stubbed) pixel resample.
+def resize_media(decoded: DataFrame, max_side: int = 64) -> DataFrame:
+    """Aspect-preserving resize planning.
 
-    The SPARK-side shape is the real operator: compute the target
-    geometry (longest side clamped to ``max_side``, aspect ratio kept,
-    never upscale) as pure JVM columns, then run the per-item pixel
-    work as an Arrow-batched kernel over only the rows that NEED
-    resampling — at lake scale the filter is the point, most media is
-    already within bounds.  ``real_codec=True`` is the PIL/av seam
-    (NotImplementedError here); the default path passes bytes through
-    and marks ``resized`` so downstream plumbing is testable.
+    Computes the target geometry (longest side clamped to ``max_side``,
+    aspect ratio kept, never upscale) as pure JVM columns and flags the
+    rows that NEED resampling — at lake scale that filter is the point,
+    most media is already within bounds.  No pixels are resampled: the
+    bytes pass through and ``resized`` marks the flagged rows, so the
+    downstream plumbing is testable without PIL or av.
     """
     scale = F.least(
         F.lit(1.0),
@@ -117,22 +104,7 @@ def resize_media(
         "needs_resize",
         (F.col("target_w") != F.col("width")) | (F.col("target_h") != F.col("height")),
     )
-    if not real_codec:
-        return planned.withColumn("resized", F.col("needs_resize"))
-
-    def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        raise NotImplementedError(
-            "real resampling (PIL/av) is not available in this "
-            "environment; plug it in here — the kernel receives only "
-            "rows with needs_resize=true"
-        )
-
-    schema = planned.schema.simpleString().replace("struct<", "").rstrip(">")
-    skip = planned.filter(~F.col("needs_resize"))
-    work = planned.filter(F.col("needs_resize")).mapInPandas(
-        kernel, f"{schema}"
-    )
-    return skip.unionByName(work).withColumn("resized", F.col("needs_resize"))
+    return planned.withColumn("resized", F.col("needs_resize"))
 
 
 def frame_sample(decoded: DataFrame, every_nth: int = 2) -> DataFrame:

@@ -327,7 +327,6 @@ def minhash_signatures(
     text_col: str = "text",
     shingle_n: int = 3,
     num_hashes: int = 16,
-    hash_family: str = "md5",
 ) -> DataFrame:
     """MinHash signatures: sig[k] = min over shingles of h_k(shingle).
 
@@ -359,46 +358,32 @@ def minhash_signatures(
     """
     sh = _shingled(docs, id_col, text_col, shingle_n)
     ex = sh.select("doc_id", F.explode_outer("shingles").alias("sh"))
-    if hash_family == "md5":
-        hexd = F.md5(F.col("sh").cast("binary"))
-        h1 = F.conv(F.substring(hexd, 1, 15), 16, 10).cast("bigint")
-        h2 = F.pmod(
-            F.conv(F.substring(hexd, 17, 15), 16, 10).cast("bigint"),
-            F.lit(2**58),
-        )
-        base = ex.select("doc_id", h1.alias("h1"), h2.alias("h2"))
-        # mask to 59 bits: WITHOUT the wrap, k*h2 dominates h1 for
-        # large k and every component's argmin collapses onto the
-        # min-h2 shingle — components correlate, and a J≈0.95 pair can
-        # agree on 0/16 components when its one differing shingle holds
-        # the min h2 (measured 4.2% of planted pairs below 8/16; zero
-        # after the mask).  Overflow-free: h1 < 2^60, k*h2 < 15*2^58,
-        # sum < 2^63 — identical wrap-free arithmetic in any engine.
-        # one F.expr per hash column (not ~6 Column ops each): a py4j
-        # round trip is ~1.7 ms, so the per-op spelling cost ~0.2 s of
-        # driver time per construction; the parsed tree is the same
-        # integer-exact arithmetic (guide §7.3)
-        mask = (1 << 59) - 1
-        hashed = base.select(
-            "doc_id",
-            *[
-                F.expr(f"(h1 + {k} * h2) & {mask} AS h_{k}")
-                for k in range(num_hashes)
-            ],
-        )
-    else:  # xxhash64: cheaper still, JVM-only (no oracle parity)
-        # xxhash64 of NULL is non-null (null inputs are skipped) —
-        # guard so empty docs aggregate to NULL
-        hashed = ex.select(
-            "doc_id",
-            *[
-                F.expr(
-                    f"CASE WHEN sh IS NOT NULL"
-                    f" THEN xxhash64({k}, sh) END AS h_{k}"
-                )
-                for k in range(num_hashes)
-            ],
-        )
+    hexd = F.md5(F.col("sh").cast("binary"))
+    h1 = F.conv(F.substring(hexd, 1, 15), 16, 10).cast("bigint")
+    h2 = F.pmod(
+        F.conv(F.substring(hexd, 17, 15), 16, 10).cast("bigint"),
+        F.lit(2**58),
+    )
+    base = ex.select("doc_id", h1.alias("h1"), h2.alias("h2"))
+    # mask to 59 bits: WITHOUT the wrap, k*h2 dominates h1 for
+    # large k and every component's argmin collapses onto the
+    # min-h2 shingle — components correlate, and a J≈0.95 pair can
+    # agree on 0/16 components when its one differing shingle holds
+    # the min h2 (measured 4.2% of planted pairs below 8/16; zero
+    # after the mask).  Overflow-free: h1 < 2^60, k*h2 < 15*2^58,
+    # sum < 2^63 — identical wrap-free arithmetic in any engine.
+    # one F.expr per hash column (not ~6 Column ops each): a py4j
+    # round trip is ~1.7 ms, so the per-op spelling cost ~0.2 s of
+    # driver time per construction; the parsed tree is the same
+    # integer-exact arithmetic (guide §7.3)
+    mask = (1 << 59) - 1
+    hashed = base.select(
+        "doc_id",
+        *[
+            F.expr(f"(h1 + {k} * h2) & {mask} AS h_{k}")
+            for k in range(num_hashes)
+        ],
+    )
     return hashed.groupBy("doc_id").agg(
         *[F.expr(f"min(h_{k}) AS mh_{k}") for k in range(num_hashes)]
     )
@@ -440,7 +425,6 @@ def minhash_lsh_pairs(
     bands: int = 8,
     threshold: float = 0.5,
     max_bucket: int | None = None,
-    hash_family: str = "xxhash64",
 ) -> DataFrame:
     """MinHash + LSH near-dup pairs with exact-Jaccard verification.
 
@@ -460,14 +444,10 @@ def minhash_lsh_pairs(
     result is identical (pinned in tests/test_similarity.py).
     """
     rows = num_hashes // bands
-    # xxhash64 signatures are the production default (~6x cheaper);
-    # callers needing cross-engine-reproducible candidacy (the oracle
-    # gate) pass hash_family="md5".  Band bucketing below stays xxhash64
-    # either way: bucket ids never leave the plan, and bucket equality
-    # is signature-row equality regardless of how rows were hashed.
-    sigs = minhash_signatures(
-        docs, id_col, text_col, shingle_n, num_hashes, hash_family=hash_family
-    )
+    # band bucketing stays xxhash64 over the md5 signatures: bucket ids
+    # never leave the plan, and bucket equality is signature-row
+    # equality regardless of how rows were hashed
+    sigs = minhash_signatures(docs, id_col, text_col, shingle_n, num_hashes)
     banded = _banded(sigs, num_hashes, bands)
     # candidate pairs via posting lists (groupBy bucket -> ordered pairs):
     # one evaluation of the banding subplan and one shuffle — a self-join
@@ -544,7 +524,6 @@ def minhash_lsh_incremental(
     bands: int = 8,
     threshold: float = 0.5,
     max_bucket: int | None = None,
-    hash_family: str = "xxhash64",
 ) -> DataFrame:
     """Incremental near-dup dedup: per-NEW-doc verdicts against the
     historical corpus AND earlier docs of the same batch — the
@@ -565,12 +544,8 @@ def minhash_lsh_incremental(
     qualifying similarity (independent aggregates, deterministic; they
     may come from different partners).
     """
-    sig_new = minhash_signatures(
-        new_docs, id_col, text_col, shingle_n, num_hashes, hash_family=hash_family
-    )
-    sig_hist = minhash_signatures(
-        hist_docs, id_col, text_col, shingle_n, num_hashes, hash_family=hash_family
-    )
+    sig_new = minhash_signatures(new_docs, id_col, text_col, shingle_n, num_hashes)
+    sig_hist = minhash_signatures(hist_docs, id_col, text_col, shingle_n, num_hashes)
     b_new = _banded(sig_new, num_hashes, bands)
     b_hist = _banded(sig_hist, num_hashes, bands)
     if max_bucket is not None:
@@ -663,7 +638,6 @@ def simhash_signatures(
     id_col: str = "doc_id",
     text_col: str = "text",
     bits: int = 64,
-    hash_family: str = "xxhash64",
 ) -> DataFrame:
     """SimHash per doc: per-bit majority vote of token hashes, packed
     into one BIGINT.
@@ -677,10 +651,8 @@ def simhash_signatures(
     ex = spread(docs.select(F.col(id_col).alias("doc_id"), F.col(text_col))).select(
         "doc_id", F.explode(TXT.tokenize(F.col(text_col))).alias("tok")
     ).withColumn(
-        "h",
-        # md5-derived 60-bit family reproduces in any engine (oracle
-        # parity); xxhash64 is the cheaper production default
-        TXT.hash64(F.col("tok")) if hash_family == "md5" else F.xxhash64("tok"),
+        # md5-derived 60-bit family: reproduces in any engine (oracle parity)
+        "h", TXT.hash64(F.col("tok"))
     )
     # one F.expr per aggregate / ONE for the 64-term pack: the per-op
     # Column API costs a ~1.7 ms py4j round trip per node (~840 calls
@@ -714,7 +686,6 @@ def simhash_pairs(
     text_col: str = "text",
     max_hamming: int = 3,
     max_bucket: int | None = None,
-    hash_family: str = "xxhash64",
 ) -> DataFrame:
     """SimHash near-dup pairs: hamming(simhash_i, simhash_j) <= d.
 
@@ -741,7 +712,7 @@ def simhash_pairs(
             return shifted  # single-chunk case: the whole hash
         return shifted.bitwiseAND(F.lit((1 << widths[c]) - 1))
 
-    hashed = simhash_signatures(docs, id_col, text_col, hash_family=hash_family)
+    hashed = simhash_signatures(docs, id_col, text_col)
     chunks = hashed.select(
         "doc_id",
         "sh",

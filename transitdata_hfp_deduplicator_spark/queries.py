@@ -69,8 +69,7 @@ def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
 
 
 #: stage intermediates persisted by composed queries (q_corpus_curate's
-#: exact-dedup survivors, the incremental-substring gram index),
-#: tracked exactly like the heavy-hitter fold caches
+#: exact-dedup survivors), tracked exactly like the heavy-hitter fold caches
 #: (operators/heavyhitters.py::_FOLD_CACHES): each query build releases
 #: the previous build's caches, so a full gate/bench sweep never holds
 #: more than one query's worth; an early release just recomputes, never
@@ -86,11 +85,10 @@ def _release_stage_caches() -> None:
             pass
 
 
-def _stage_cache(df: DataFrame, fresh: bool = False) -> DataFrame:
-    """Persist a stage boundary; ``fresh=True`` (a query's FIRST cache)
-    releases the previous query's caches first."""
-    if fresh:
-        _release_stage_caches()
+def _stage_cache(df: DataFrame) -> DataFrame:
+    """Persist a stage boundary, releasing the previous query's caches
+    first."""
+    _release_stage_caches()
     out = df.persist()
     _STAGE_CACHES.append(out)
     return out
@@ -1794,7 +1792,6 @@ def q_dedup_ladder(spark: SparkSession, sf_dir: str) -> DataFrame:
             num_hashes=16,
             bands=8,
             threshold=0.5,
-            hash_family="md5",
         )
         .select(F.col("j").alias("doc_id"))
         .distinct()
@@ -3635,7 +3632,7 @@ def q_dedup_incr_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
     new = d.join(F.broadcast(cut)).filter(F.col("doc_id") >= F.col("c"))
     return minhash_lsh_incremental(
         new, hist, "doc_id", "text", shingle_n=3, num_hashes=16, bands=8,
-        threshold=0.5, hash_family="md5",
+        threshold=0.5,
     )
 
 
@@ -3801,16 +3798,14 @@ def q_dedup_minhash_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     the 100 TB near-dup plan (signatures map-only; shuffle keys are
     band buckets).  HASH-CHECKED: the md5-derived signature family is
     engine-independent, so DuckDB reproduces band candidacy (8 bands x
-    2 rows) and the exact-Jaccard verdicts bit-for-bit.  The engine
-    default for production stays xxhash64 (~6x cheaper, same plan)."""
+    2 rows) and the exact-Jaccard verdicts bit-for-bit."""
     from transitdata_hfp_deduplicator_spark.operators.similarity import (
         minhash_lsh_pairs,
     )
 
     d = _t(spark, sf_dir, "documents")
     return minhash_lsh_pairs(
-        d, "doc_id", "text", shingle_n=3, num_hashes=16, bands=8, threshold=0.5,
-        hash_family="md5",
+        d, "doc_id", "text", shingle_n=3, num_hashes=16, bands=8, threshold=0.5
     )
 
 
@@ -3964,12 +3959,11 @@ def q_dedup_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     hashes; pigeonhole chunk join = exact recall for d<=3).
     HASH-CHECKED: with the md5-derived token-hash family the signature
     is engine-independent, and full pigeonhole recall means the result
-    equals DuckDB's brute-force hamming join exactly.  Production
-    default stays xxhash64 (same plan, cheaper hashing)."""
+    equals DuckDB's brute-force hamming join exactly."""
     from transitdata_hfp_deduplicator_spark.operators.similarity import simhash_pairs
 
     d = _t(spark, sf_dir, "documents")
-    return simhash_pairs(d, "doc_id", "text", max_hamming=3, hash_family="md5")
+    return simhash_pairs(d, "doc_id", "text", max_hamming=3)
 
 
 # ---------------------------------------------------------------------------
@@ -8698,9 +8692,7 @@ def q_corpus_curate(spark: SparkSession, sf_dir: str) -> DataFrame:
     first = qual.groupBy(F.md5(F.col("t").cast("binary")).alias("fp")).agg(
         F.min("doc_id").alias("doc_id")
     )
-    ex = _stage_cache(
-        qual.join(first.select("doc_id"), "doc_id", "left_semi"), fresh=True
-    )
+    ex = _stage_cache(qual.join(first.select("doc_id"), "doc_id", "left_semi"))
     near_j = (
         minhash_lsh_pairs(
             ex.select("doc_id", F.col("t").alias("text")),
@@ -8710,7 +8702,6 @@ def q_corpus_curate(spark: SparkSession, sf_dir: str) -> DataFrame:
             num_hashes=16,
             bands=8,
             threshold=0.5,
-            hash_family="md5",
         )
         .select(F.col("j").alias("doc_id"))
         .distinct()

@@ -77,8 +77,16 @@ def parse_lines(lines: DataFrame, col: str = "value") -> DataFrame:
 
 
 def read_corpus(spark: SparkSession, path: str) -> DataFrame:
-    """Load an hfp-5000.txt-format corpus as (server_ts, topic, payload)."""
-    return parse_lines(spark.read.text(path))
+    """Load an hfp-5000.txt-format corpus as (server_ts, topic, payload).
+
+    Lines split the way the app's ``hfp_text`` reader splits them
+    (``hfp_datasource.read_lines``): only at ``\n``, with trailing
+    ``\r`` stripped and empty lines skipped.  Spark's default text
+    reader would also end a line at a bare ``\r`` and keep blank lines.
+    """
+    raw = spark.read.option("lineSep", "\n").text(path)
+    lines = raw.select(F.rtrim("value", F.lit("\r")).alias("value"))
+    return parse_lines(lines.filter(F.col("value") != ""))
 
 
 def with_topic_struct(df: DataFrame, topic_col: str = "topic") -> DataFrame:

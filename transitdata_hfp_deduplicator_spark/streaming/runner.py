@@ -98,7 +98,6 @@ def parquet_stream(
 def run_to_memory(
     sdf: DataFrame,
     output_mode: str = "append",
-    name: str | None = None,
 ) -> DataFrame:
     """Execute a streaming DataFrame to completion; returns the result
     as a batch DataFrame.

@@ -78,7 +78,7 @@ def read_parquet(spark: SparkSession, path: str) -> DataFrame:
     return df
 
 
-def spread(df: DataFrame, min_parts: int | None = None) -> DataFrame:
+def spread(df: DataFrame) -> DataFrame:
     """Round-robin repartition IFF the scan under-parallelized.
 
     Small single-file tables plan as ONE input split, so every
@@ -89,7 +89,7 @@ def spread(df: DataFrame, min_parts: int | None = None) -> DataFrame:
     scale), it's an identity — no shuffle is added.
     """
     sc = df.sparkSession.sparkContext
-    target = min_parts or sc.defaultParallelism
+    target = sc.defaultParallelism
     if df.rdd.getNumPartitions() >= target:
         return df
     return df.repartition(target)
