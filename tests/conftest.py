@@ -89,6 +89,7 @@ SLOW_TESTS = {
     "test_bloom.py::test_member_rowjoin_agrees_with_probe",
     "test_bloom.py::test_probe_is_deterministic_and_keeps_schema",
     "test_corpus_pipeline.py::test_curation_pipeline_accounts_for_every_row",
+    "test_app_crash.py::test_kill_inside_batch_then_restart_forwards_each_unique_once",
 }
 
 

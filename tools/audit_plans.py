@@ -9,9 +9,10 @@ Usage: python tools/audit_plans.py [sf_dir]
 from __future__ import annotations
 
 import re
+import os
 import sys
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from transitdata_hfp_deduplicator_spark.plans import physical_plan
 from transitdata_hfp_deduplicator_spark.queries import QUERIES

@@ -17,6 +17,7 @@ judge hit "no files match pattern" passing bare names first.
 from __future__ import annotations
 
 import math
+import os
 import sys
 import time
 
@@ -84,7 +85,7 @@ def main() -> int:
         sf_dir = args[0] if args else "/root/testdata/sf0.01"
         only = set(args[1:])
 
-    sys.path.insert(0, "/root/repo")
+    sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
     import __spark_entry__ as entrymod
     from transitdata_hfp_deduplicator_spark.session import get_spark
     from transitdata_hfp_deduplicator_spark.tables import TABLE_NAMES

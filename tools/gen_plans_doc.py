@@ -3,9 +3,11 @@ queries with scale commentary. Run: python tools/gen_plans_doc.py"""
 
 from __future__ import annotations
 
+import os
 import sys
 
-sys.path.insert(0, "/root/repo")
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, ROOT)
 
 from transitdata_hfp_deduplicator_spark.plans import physical_plan
 from transitdata_hfp_deduplicator_spark.queries import QUERIES
@@ -372,7 +374,7 @@ def main() -> None:
                 head.append("… (truncated)")
                 break
         out += [f"## {name}", "", comment, "", "```", *head, "```", ""]
-    with open("/root/repo/PLANS.md", "w") as f:
+    with open(os.path.join(ROOT, "PLANS.md"), "w") as f:
         f.write("\n".join(out))
     print("wrote PLANS.md")
 

@@ -17,10 +17,11 @@ Usage: python tools/stress_pagerank.py [n_nodes] [extra_per_node]
 from __future__ import annotations
 
 import json
+import os
 import sys
 import time
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window as W

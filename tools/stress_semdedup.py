@@ -25,10 +25,11 @@ Usage: python tools/stress_semdedup.py [n_vecs] [k_cells] [tau]
 from __future__ import annotations
 
 import json
+import os
 import sys
 import time
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from pyspark.sql import functions as F
 

@@ -10,6 +10,17 @@ scale to a multi-executor cluster:
   UTC (hfp `tst` field) and the DuckDB oracle is UTC-naive.
 * Arrow enabled — every Python-side operator here uses Pandas UDFs /
   mapInPandas (Arrow batches), never row-at-a-time UDFs.
+* Checkpoint commits through ``FileSystemBasedCheckpointFileManager`` —
+  every streaming query writes its offset and commit logs, the file
+  sink's ``_spark_metadata`` log and its state-store files with
+  ``FileSystem.create`` plus ``FileSystem.rename``.  Spark's default
+  ``FileContext`` manager renames through ``getFileLinkStatus``, which
+  without libhadoop shells out to ``readlink`` several times per
+  micro-batch; ``LocalFileSystem`` still writes the ``.crc`` side files
+  and Spark's state-file checksums.  On HDFS the rename stays atomic and
+  refuses an existing target, at the cost of one more ``exists`` RPC;
+  object stores without an ``AbstractFileSystem`` already fall back to
+  this manager.
 """
 
 from __future__ import annotations
@@ -96,6 +107,11 @@ def get_spark(
         # Real deployments set this to the lake path; table writers can
         # also pass an explicit path per table.
         .config("spark.sql.warehouse.dir", _default_warehouse())
+        .config(
+            "spark.sql.streaming.checkpointFileManagerClass",
+            "org.apache.spark.sql.execution.streaming.checkpointing."
+            "FileSystemBasedCheckpointFileManager",
+        )
     )
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)
