@@ -70,7 +70,7 @@ def format_output(timings: dict, sf, calib, retries=None,
     if subset:
         dd["subset"] = sorted(subset)
         fd["subset"] = True
-    return json.dumps(dd), json.dumps(fd)
+    return json.dumps(dd), json.dumps(fd, separators=(",", ":"))
 
 
 # Calibration workload: a fixed 4B-row hash aggregate whose plan never

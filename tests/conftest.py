@@ -60,6 +60,7 @@ SLOW_TESTS = {
     "test_clusters.py::test_distributed_path_matches_unionfind",
     "test_sources.py::test_stream_dedup_canonicalizes_typed_payloads",
     "test_listener.py::test_listener_captures_failure",
+    "test_listener.py::test_listener_reads_real_progress_from_json",
     "test_similarity.py::test_exploded_shingles_match_plain_explode",
     "test_pq.py::test_ivfadc_shortlist_restricted_to_probed_cells",
     "test_pq.py::test_ivfadc_query_self_recall",

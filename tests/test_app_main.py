@@ -119,3 +119,41 @@ def test_app_golden_corpus(spark, tmp_path, capsys):
     (rec,) = _run(capsys, CORPUS, out, str(tmp_path / "ckpt"))
     assert spark.read.parquet(out).count() == 4956
     assert (rec["messages"], rec["primes"], rec["alert"]) == (5000, 4956, "FEED_DOWN")
+
+
+def test_forward_plan_compiles_at_most_once_per_batch(spark, tmp_path, make_hfp_feed):
+    """Generated code is reused across micro-batches: from the third
+    data batch on, each compiles at most one class, the watermark
+    eviction predicate Spark builds per batch.  A per-batch literal in
+    the plan (``current_timestamp()``) is inlined into the generated
+    source, so every batch would compile its whole-stage classes anew
+    (three compiles per data batch)."""
+    from transitdata_hfp_deduplicator_spark.__main__ import forward_stream
+    from transitdata_hfp_deduplicator_spark.config import DedupConfig
+
+    feed = make_hfp_feed()
+    rounds = 8
+    step = feed.messages // rounds
+    feed.write([])
+    compiles = spark._jvm.org.apache.spark.metrics.source.CodegenMetrics.METRIC_COMPILATION_TIME()
+    q = (
+        forward_stream(spark, feed.path, DedupConfig())
+        .writeStream.format("parquet")
+        .option("path", str(tmp_path / "out"))
+        .option("checkpointLocation", str(tmp_path / "ckpt"))
+        .start()
+    )
+    seen = []  # (data batches, compiles) after each appended round
+    try:
+        for i in range(rounds):
+            feed.write(feed.lines[i * step : (i + 1) * step], mode="a")
+            q.processAllAvailable()
+            # Spark follows a data batch with a no-data one that moves
+            # the watermark; only the data batches are counted
+            batches = sum(1 for p in q.recentProgress if p.numInputRows)
+            seen.append((batches, compiles.getCount()))
+    finally:
+        q.stop()
+    assert seen[-1][0] >= rounds, seen
+    per_batch = [(c1 - c0) / (b1 - b0) for (b0, c0), (b1, c1) in zip(seen, seen[1:])]
+    assert max(per_batch[1:]) <= 1, per_batch

@@ -48,6 +48,11 @@ def test_failed_queries_excluded_from_total():
     _, final = format_output(timings, 0.1, 3.0512, retries=retries)
     assert json.loads(final)["n_errors"] == 100
     assert len(final) < 200, f"final line {len(final)} chars"
+    # ... and so does a subset run that also carries twelve retries
+    retries = {q: {"sec": 9.0, "retry_sec": 1.0, "transient": True} for q in names[-12:]}
+    _, final = format_output(timings, 0.1, 3.0512, retries=retries, subset=set(names))
+    assert json.loads(final)["retried"] == 12 and json.loads(final)["subset"] is True
+    assert len(final) < 200, f"final line {len(final)} chars"
 
 
 def test_calibrate_median_sheds_cold_run_and_outlier():

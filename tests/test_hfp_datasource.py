@@ -6,7 +6,9 @@ parity where the reference corpus exists.
 
 from __future__ import annotations
 
+import datetime as dt
 import os
+import time
 
 import pytest
 
@@ -19,6 +21,7 @@ from transitdata_hfp_deduplicator_spark.sources.hfp_datasource import (
 )
 
 CORPUS = "/root/reference/src/integration-test/resources/hfp-5000.txt"
+PARSED = ["server_ts", "topic", "payload"]  # the columns parsed from the line
 
 
 @pytest.fixture(scope="module", autouse=True)
@@ -38,13 +41,18 @@ def _keys(df) -> set[tuple[str, str]]:
 
 
 def test_reads_all_lines(spark, hfp_feed):
-    assert _load(spark, hfp_feed.path).count() == hfp_feed.messages
+    before = time.time()
+    rows = _load(spark, hfp_feed.path).collect()
+    after = time.time()
+    assert len(rows) == hfp_feed.messages
+    # each partition stamps the time it read its lines
+    assert all(before <= r.arrived.timestamp() <= after for r in rows)
 
 
 def test_matches_column_expression_parser(spark, hfp_feed):
     """The DataSource rows equal hfp.parse_lines' output exactly —
     two independent implementations of ITDeduplicatorTest.java:138-148."""
-    via_ds = set(map(tuple, _load(spark, hfp_feed.path).collect()))
+    via_ds = set(map(tuple, _load(spark, hfp_feed.path).select(PARSED).collect()))
     via_expr = set(map(tuple, read_corpus(spark, hfp_feed.path).collect()))
     assert via_ds == via_expr
     assert len(via_ds) == hfp_feed.messages
@@ -142,22 +150,31 @@ def _write_torn(feed, n: int) -> int:
 
 def test_stream_reader_offsets_bound_whole_lines(hfp_feed):
     """A stream batch ends after the last '\n': the torn last line is
-    left for the next batch, and replaying the committed range yields
-    the same rows."""
+    left for the next batch.  The end offset carries the batch's
+    arrival stamp, so replaying the logged range yields the same rows,
+    ``arrived`` included, and a read with no new complete line hands
+    back its start offset, so Spark runs no batch."""
     whole = _write_torn(hfp_feed, 2)
     reader = HfpTextStreamReader({"path": hfp_feed.path})
     rows, end = reader.read({"pos": 0})
-    expected = [parse_hfp_line(ln.rstrip("\n")) for ln in hfp_feed.lines[:2]]
-    assert (list(rows), end) == (expected, {"pos": whole})
-    assert list(reader.readBetweenOffsets({"pos": 0}, end)) == expected
-    rows, again = reader.read(end)
-    assert (list(rows), again) == ([], end)
+    rows = list(rows)
+    assert set(end) == {"pos", "at"} and end["pos"] == whole
+    arrived = dt.datetime(1970, 1, 1, tzinfo=dt.timezone.utc) + dt.timedelta(
+        microseconds=end["at"]
+    )
+    expected = [(*parse_hfp_line(ln.rstrip("\n")), arrived) for ln in hfp_feed.lines[:2]]
+    assert rows == expected
+    assert list(reader.readBetweenOffsets({"pos": 0}, end)) == rows
+    idle, again = reader.read(end)
+    assert list(idle) == [] and again is end
 
     with open(hfp_feed.path, "a", encoding="utf-8") as f:
         f.write(hfp_feed.lines[2][len(hfp_feed.lines[2]) // 2 :])
     rows, end3 = reader.read(end)
-    assert list(rows) == [parse_hfp_line(hfp_feed.lines[2].rstrip("\n"))]
-    assert end3 == {"pos": os.path.getsize(hfp_feed.path)}
+    rows = list(rows)
+    assert [r[:3] for r in rows] == [parse_hfp_line(hfp_feed.lines[2].rstrip("\n"))]
+    assert end3["pos"] == os.path.getsize(hfp_feed.path) and end3["at"] >= end["at"]
+    assert list(reader.readBetweenOffsets(end, end3)) == rows
 
 
 def test_complete_end_scans_back_across_chunks(tmp_path):
@@ -190,7 +207,7 @@ def test_stream_forwards_line_torn_by_append_whole(spark, hfp_feed, tmp_path):
         q.processAllAvailable()
     finally:
         q.stop()
-    got = sorted(map(tuple, spark.table("torn_line").collect()))
+    got = sorted(map(tuple, spark.table("torn_line").select(PARSED).collect()))
     assert got == sorted(parse_hfp_line(ln.rstrip("\n")) for ln in hfp_feed.lines[:3])
 
 
@@ -235,7 +252,7 @@ def test_line_split_parity_with_read_corpus(spark, tmp_path):
         b"\r\n"
         b'5 /hfp/e {"VP":{"veh":5}}'  # no final newline
     )
-    via_ds = sorted(map(tuple, _load(spark, str(p)).collect()))
+    via_ds = sorted(map(tuple, _load(spark, str(p)).select(PARSED).collect()))
     via_corpus = sorted(map(tuple, read_corpus(spark, str(p)).collect()))
     assert via_corpus == via_ds
     assert [r[0] for r in via_ds] == ["1", "2", "3", "4", "5"]

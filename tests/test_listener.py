@@ -178,3 +178,37 @@ def test_listener_captures_failure(spark, tmp_path):
         assert failures and "boom" in failures[0]
     finally:
         spark.streams.removeListener(listener)
+
+
+def test_listener_reads_real_progress_from_json(spark, tmp_path, hfp_feed):
+    """A real query's progress reaches the listener rebuilt from the
+    event's JSON (one py4j call per event), holding no JVM handle, with
+    the observed prime count intact."""
+    from transitdata_hfp_deduplicator_spark.__main__ import forward_stream
+
+    progress, records = [], []
+
+    class Recording(DedupQueryListener):
+        def onQueryProgress(self, event):
+            progress.append(event.progress)
+            super().onQueryProgress(event)
+
+    listener = Recording(DedupConfig(poll_interval="1 hour"), emit=records.append)
+    spark.streams.addListener(listener)
+    try:
+        q = (
+            forward_stream(spark, hfp_feed.path, DedupConfig())
+            .writeStream.format("parquet")
+            .option("path", str(tmp_path / "out"))
+            .option("checkpointLocation", str(tmp_path / "ckpt"))
+            .start()
+        )
+        q.processAllAvailable()
+        q.stop()
+        assert listener.terminated.wait(30)
+    finally:
+        spark.streams.removeListener(listener)
+    assert progress and all(p._jdict is not None and p._jprogress is None for p in progress)
+    primes = sum(p.observedMetrics[OBSERVATION]["primes"] for p in progress if p.numInputRows)
+    assert primes == len(hfp_feed.uniques)
+    assert _counts(records) == [(hfp_feed.messages, primes, primes, 1.0, None)]

@@ -12,6 +12,13 @@ reference's fixed-rate scheduler.  A window closes on the first
 progress or idle event after its end; the open window is flushed, up
 to that moment, when the query terminates.
 
+Each event crosses from the JVM as one JSON string (``event.json()``)
+and is rebuilt with PySpark's ``Query*Event.fromJson``, the path Spark
+Connect clients take: one py4j call per event.  PySpark's default
+bridge reads every field of a progress, its sources, sink and state
+operators through its own py4j round trip.  The JSON bridge belongs to
+this listener only; other listeners keep PySpark's.
+
 Alert band (Analytics.java:50-60; thresholds environment.conf:29-34):
   ratio > 1.0                         -> more duplicates than primaries
   alert_on && ratio < ratio_threshold -> feed down / one feed missing
@@ -27,6 +34,12 @@ import time
 from collections.abc import Callable
 
 from pyspark.sql.streaming import StreamingQueryListener
+from pyspark.sql.streaming.listener import (
+    QueryIdleEvent,
+    QueryProgressEvent,
+    QueryStartedEvent,
+    QueryTerminatedEvent,
+)
 
 from transitdata_hfp_deduplicator_spark.config import DedupConfig
 
@@ -69,6 +82,33 @@ def _print_json(record: dict) -> None:
     print(json.dumps(record), flush=True)
 
 
+def _from_json(event_cls, jevent):
+    return event_cls.fromJson(json.loads(jevent.json()))
+
+
+class _JsonEvents:
+    """py4j callback for ``PythonStreamingQueryListener`` that hands each
+    event to ``listener`` rebuilt from the event's JSON."""
+
+    def __init__(self, listener: StreamingQueryListener):
+        self._listener = listener
+
+    def onQueryStarted(self, jevent) -> None:
+        self._listener.onQueryStarted(_from_json(QueryStartedEvent, jevent))
+
+    def onQueryProgress(self, jevent) -> None:
+        self._listener.onQueryProgress(_from_json(QueryProgressEvent, jevent))
+
+    def onQueryIdle(self, jevent) -> None:
+        self._listener.onQueryIdle(_from_json(QueryIdleEvent, jevent))
+
+    def onQueryTerminated(self, jevent) -> None:
+        self._listener.onQueryTerminated(_from_json(QueryTerminatedEvent, jevent))
+
+    class Java:
+        implements = ["org.apache.spark.sql.streaming.PythonStreamingQueryListener"]
+
+
 class DedupQueryListener(StreamingQueryListener):
     """Emits one JSON feed-health record per ``cfg.poll_interval`` window
     and calls ``on_failure`` once when a query dies with an exception.
@@ -90,6 +130,18 @@ class DedupQueryListener(StreamingQueryListener):
         self._clock = clock
         self._queries: set[str] = set()
         self._start, self._messages, self._primes = clock(), 0, 0
+
+    @property
+    def _jlistener(self):
+        # what ``spark.streams.addListener`` registers: the JSON bridge
+        # in place of PySpark's field-by-field one
+        from pyspark import SparkContext
+
+        if not hasattr(self, "_jlistenerobj"):
+            self._jlistenerobj = SparkContext._jvm.PythonStreamingQueryListenerWrapper(
+                _JsonEvents(self)
+            )
+        return self._jlistenerobj
 
     def _close(self, end: float) -> None:
         primes, dups = self._primes, self._messages - self._primes
