@@ -1,10 +1,11 @@
 """Feed-health windows of streaming/listener.py, driven by synthetic
 listener events on a fake clock: window closing, the termination flush,
-the alert band and the A11 failure hook — plus the config it reads and
+the alert band and the A11 failure log — plus the config it reads and
 one real query whose batch raises."""
 
 from __future__ import annotations
 
+import logging
 from types import SimpleNamespace as NS
 
 import pytest
@@ -20,18 +21,18 @@ from transitdata_hfp_deduplicator_spark.streaming.listener import (
 )
 
 T0 = 1_700_000_000.0
+LISTENER_LOGGER = "transitdata_hfp_deduplicator_spark.streaming.listener"
 
 
 def _listener(**cfg):
-    clock, records, failures = NS(t=T0), [], []
+    clock, records = NS(t=T0), []
     lst = DedupQueryListener(
         DedupConfig(**{"poll_interval": "1 minute", **cfg}),
-        on_failure=lambda qid, exc: failures.append((qid, exc)),
         emit=records.append,
         clock=lambda: clock.t,
     )
     lst.onQueryStarted(NS(id="q"))
-    return lst, clock, records, failures
+    return lst, clock, records
 
 
 def _progress(lst, clock, at, rows, primes, qid="q"):
@@ -46,7 +47,7 @@ def _counts(records):
 
 
 def test_windows_close_on_first_event_after_their_end():
-    lst, clock, records, _ = _listener()
+    lst, clock, records = _listener()
     _progress(lst, clock, 10, rows=10, primes=5)
     _progress(lst, clock, 50, rows=8, primes=4)
     assert records == []
@@ -72,7 +73,7 @@ def test_windows_close_on_first_event_after_their_end():
 
 @pytest.mark.parametrize("alert_on_threshold,alert", [(True, "FEED_DOWN"), (False, None)])
 def test_other_queries_and_unobserved_batches_are_ignored(alert_on_threshold, alert):
-    lst, clock, records, _ = _listener(alert_on_threshold=alert_on_threshold)
+    lst, clock, records = _listener(alert_on_threshold=alert_on_threshold)
     _progress(lst, clock, 1, rows=10, primes=5, qid="other")
     _progress(lst, clock, 2, rows=7, primes=None)
     _progress(lst, clock, 3, rows=2, primes=2)
@@ -82,12 +83,21 @@ def test_other_queries_and_unobserved_batches_are_ignored(alert_on_threshold, al
     assert _counts(records) == [(2, 2, 0, 0.0, alert)]
 
 
-def test_failure_flushes_then_fires_hook_once():
-    lst, clock, records, failures = _listener()
+def _failures(caplog):
+    return [
+        r.getMessage()
+        for r in caplog.records
+        if r.name == LISTENER_LOGGER and r.levelno == logging.ERROR
+    ]
+
+
+def test_failure_flushes_then_logs_error_once(caplog):
+    lst, clock, records = _listener()
     _progress(lst, clock, 5, rows=4, primes=2)
-    lst.onQueryTerminated(NS(id="q", exception="boom"))
+    with caplog.at_level(logging.ERROR, logger=LISTENER_LOGGER):
+        lst.onQueryTerminated(NS(id="q", exception="boom"))
     assert _counts(records) == [(4, 2, 2, 1.0, None)]
-    assert failures == [("q", "boom")]
+    assert _failures(caplog) == ["streaming query q failed: boom"]
     assert lst.terminated.is_set()
 
 
@@ -152,11 +162,13 @@ def test_alert_code_band(ratio, alert_on_threshold):
     assert alert_code(ratio, 0.97, alert_on_threshold) == (on if alert_on_threshold else off)
 
 
-def test_listener_captures_failure(spark, tmp_path):
-    """A real query whose foreachBatch raises reaches the failure hook."""
-    failures = []
-    listener = DedupQueryListener(on_failure=lambda qid, exc: failures.append(exc))
+def test_listener_captures_failure(spark, tmp_path, caplog):
+    """A real query whose foreachBatch raises flushes its (empty) window
+    and logs its failure once."""
+    records = []
+    listener = DedupQueryListener(emit=records.append)
     spark.streams.addListener(listener)
+    caplog.set_level(logging.ERROR, logger=LISTENER_LOGGER)
     try:
         src = str(tmp_path / "src")
         spark.createDataFrame([(1, "x")], "id long, s string").write.parquet(src)
@@ -175,7 +187,9 @@ def test_listener_captures_failure(spark, tmp_path):
             q.awaitTermination()
         # listener events are asynchronous
         assert listener.terminated.wait(10)
-        assert failures and "boom" in failures[0]
+        assert _counts(records) == [(0, 0, 0, None, None)]
+        failures = _failures(caplog)
+        assert len(failures) == 1 and "boom" in failures[0]
     finally:
         spark.streams.removeListener(listener)
 

@@ -8,7 +8,7 @@ from transitdata_hfp_deduplicator_spark.session import get_spark
 def test_get_spark_leaves_active_session_untouched(spark):
     key = "spark.sql.shuffle.partitions"
     before = spark.conf.get(key)
-    again = get_spark("another-app", cpus=2, shuffle_partitions=int(before) + 1)
+    again = get_spark("another-app", cpus=int(before) + 1)
     assert again is spark
     assert spark.conf.get(key) == before
 

@@ -6,6 +6,7 @@ import datetime as dt
 import os
 import time
 
+import pytest
 from pyspark.sql import functions as F
 
 from transitdata_hfp_deduplicator_spark.streaming import (
@@ -161,32 +162,34 @@ def test_anomaly_composes_over_streaming_stats(spark, sf_dir):
     assert any(r[4] for r in got) or all(r[3] is None or abs(r[3]) < 2 for r in got)
 
 
-def test_nanosecond_timestamps_read_at_microsecond_precision(spark, tmp_path):
-    """A TIMESTAMP(NANOS) parquet column reads as TimestampType through
-    both the batch loader and the stream source, each value the
-    microsecond truncation of the stored nanoseconds."""
+def test_nanosecond_timestamps_are_refused(spark, tmp_path):
+    """Spark has no nanosecond timestamp type and the loaders convert
+    nothing: a TIMESTAMP(NANOS) parquet column fails loudly through both
+    the batch loader and the stream source."""
     import pyarrow as pa
     import pyarrow.parquet as pq
-    from pyspark.sql.types import TimestampType
 
     from transitdata_hfp_deduplicator_spark.tables import read_parquet
 
-    nanos = [1_700_000_000_123_456_789, 1_700_000_001_000_000_999, 86_400_000_000_001]
     path = str(tmp_path / "nanos.parquet")
-    pq.write_table(
-        pa.table(
-            {
-                "id": pa.array(range(len(nanos)), pa.int64()),
-                "ts": pa.array(nanos, pa.timestamp("ns")),
-            }
-        ),
-        path,
-    )
+    ts = pa.array([1_700_000_000_123_456_789, 86_400_000_000_001], pa.timestamp("ns"))
+    pq.write_table(pa.table({"ts": ts}), path)
     assert str(pq.read_schema(path).field("ts").type) == "timestamp[ns]"
-    expected = {i: ns // 1000 for i, ns in enumerate(nanos)}
-    batch = read_parquet(spark, path)
-    stream = run_to_memory(parquet_stream(spark, path))
-    for df in (batch, stream):
-        assert isinstance(df.schema["ts"].dataType, TimestampType)
-        got = {r.id: r.us for r in df.select("id", F.unix_micros("ts").alias("us")).collect()}
-        assert got == expected
+    with pytest.raises(Exception, match="PARQUET_TYPE_ILLEGAL"):
+        read_parquet(spark, path)
+    with pytest.raises(Exception, match="PARQUET_TYPE_ILLEGAL"):
+        parquet_stream(spark, path)
+
+
+def test_parquet_stream_builds_with_one_job(spark, sf_dir):
+    """Building a replay stream infers the parquet schema once: one
+    Spark job, no second read."""
+    sc = spark.sparkContext
+    group = "parquet_stream_build"
+    sc.setJobGroup(group, "build parquet_stream")
+    try:
+        parquet_stream(spark, os.path.join(sf_dir, "events.parquet"))
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    assert len(sc.statusTracker().getJobIdsForGroup(group)) == 1

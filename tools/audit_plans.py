@@ -21,7 +21,7 @@ from transitdata_hfp_deduplicator_spark.session import get_spark
 
 def main() -> None:
     sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.001"
-    spark = get_spark("plan-audit", cpus=8, shuffle_partitions=8)
+    spark = get_spark("plan-audit", cpus=8)
     rows = []
     for name, fn in QUERIES.items():
         try:

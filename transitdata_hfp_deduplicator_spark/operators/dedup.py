@@ -36,17 +36,16 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 
-def payload_digest(*cols: str | Column, bits: int = 256) -> Column:
+def payload_digest(*cols: str | Column) -> Column:
     """Collision-resistant digest of the canonical record fields.
 
     Plays the role of murmur3_128(seed=42) over canonical payload bytes
     (Deduplicator.java:27-28,46).  Bit-parity with Guava is a non-goal
     (documented in SURVEY.md §7): any deterministic collision-resistant
     digest of identical canonical content has identical dedup
-    semantics.  ``sha2`` for the 256-bit externalizable form (the
+    semantics.  ``sha2`` gives a 256-bit externalizable form (the
     reference pinned its seed so hashes could live in Redis — same
-    property: the digest is a pure function of the data), ``xxhash64``
-    for the cheap in-plan form.
+    property: the digest is a pure function of the data).
 
     The hashed serialization is prefix-free decodable — per field
     ``N;`` for NULL, else ``S<charlen>:<value>`` — so distinct records
@@ -63,10 +62,7 @@ def payload_digest(*cols: str | Column, bits: int = 256) -> Column:
             F.concat(F.lit("S"), F.length(s).cast("string"), F.lit(":"), s)
         )
 
-    canonical = F.concat(*[_enc(c) for c in cols])
-    if bits == 64:
-        return F.xxhash64(canonical)
-    return F.sha2(canonical, bits)
+    return F.sha2(F.concat(*[_enc(c) for c in cols]), 256)
 
 
 def dedup_exact(

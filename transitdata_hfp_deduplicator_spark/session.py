@@ -49,7 +49,6 @@ def _default_warehouse() -> str:
 def get_spark(
     app_name: str = "transitdata-hfp-deduplicator-spark",
     cpus: int | None = None,
-    shuffle_partitions: int | None = None,
     extra_conf: dict[str, str] | None = None,
 ) -> SparkSession:
     """Build the engine's session; an already active session is
@@ -59,11 +58,10 @@ def get_spark(
     if active is not None:
         return active
     cpus = cpus or default_parallelism()
-    shuffle_partitions = shuffle_partitions or cpus
     builder = (
         SparkSession.builder.master(f"local[{cpus}]")
         .appName(app_name)
-        .config("spark.sql.shuffle.partitions", str(shuffle_partitions))
+        .config("spark.sql.shuffle.partitions", str(cpus))
         .config("spark.sql.adaptive.enabled", "true")
         .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
         .config("spark.sql.adaptive.skewJoin.enabled", "true")

@@ -11,9 +11,10 @@ This is the engine's own connector: it registers a new format with the
 planner, and the application reads its input through it.  Splits are
 byte ranges with the Hadoop text-input boundary rule (a range owns the
 lines that START inside it; the first partial line belongs to the
-predecessor), so parallelism scales with file size and no central line
-index is needed — the same contract that lets a 1000-executor cluster
-scan a 100 TB text dump.  The stream reader uses the same rule from its
+predecessor), so no central line index is needed — the same contract
+that lets a 1000-executor cluster scan a 100 TB text dump.  A batch
+read always cuts the file into at most ``numPartitions`` equal ranges
+(default 8), whatever its size; parallelism does not grow with it.  The stream reader uses the same rule from its
 offset to the byte after the file's last newline, so its offsets always
 bound whole lines.  A stream offset is ``{"pos": <byte>, "at": <µs>}``:
 ``at`` is the batch's arrival stamp, so a replay of a logged batch

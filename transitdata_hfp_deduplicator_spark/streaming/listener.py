@@ -111,21 +111,19 @@ class _JsonEvents:
 
 class DedupQueryListener(StreamingQueryListener):
     """Emits one JSON feed-health record per ``cfg.poll_interval`` window
-    and calls ``on_failure`` once when a query dies with an exception.
+    and logs an error once when a query dies with an exception.
     Follows the queries started after it was added; ``terminated`` is
     set once the last of them has ended and its window was flushed."""
 
     def __init__(
         self,
         cfg: DedupConfig | None = None,
-        on_failure: Callable[[str, str], None] | None = None,
         emit: Callable[[dict], None] = _print_json,
         clock: Callable[[], float] = time.time,
     ):
         self._cfg = cfg or DedupConfig()
         self._window_s = interval_seconds(self._cfg.poll_interval)
         self.terminated = threading.Event()
-        self._on_failure = on_failure
         self._emit = emit
         self._clock = clock
         self._queries: set[str] = set()
@@ -192,7 +190,5 @@ class DedupQueryListener(StreamingQueryListener):
         self._close(now)
         if event.exception is not None:
             logger.error("streaming query %s failed: %s", qid, event.exception)
-            if self._on_failure:
-                self._on_failure(qid, str(event.exception))
         if not self._queries:
             self.terminated.set()

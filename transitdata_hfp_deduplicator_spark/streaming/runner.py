@@ -18,7 +18,6 @@ import tempfile
 import uuid
 
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
 
 _EPHEMERAL_ROOT: str | None = None
 
@@ -57,8 +56,9 @@ def parquet_stream(
     max_files_per_trigger: int | None = None,
     spread: bool = False,
 ) -> DataFrame:
-    """File-source stream over parquet path(s), with the same
-    TIMESTAMP(NANOS) handling as the batch loader (tables.read_parquet).
+    """File-source stream over parquet path(s); its schema comes from
+    one batch read through ``tables.read_parquet`` (same session confs,
+    one schema-inference job).
 
     ``spread=True`` round-robin-repartitions each micro-batch to the
     session's default parallelism — the replay twin of
@@ -73,25 +73,18 @@ def parquet_stream(
     """
     from transitdata_hfp_deduplicator_spark.tables import read_parquet
 
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    spark.conf.set("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
     if os.path.isfile(path):
         # the file source requires a directory; symlink, don't copy
         d = ephemeral_dir("stream_src_")
         os.symlink(path, os.path.join(d, os.path.basename(path)))
         path = d
-    batch = spark.read.parquet(path)  # schema probe (streaming needs explicit schema)
-    reader = spark.readStream.schema(batch.schema)
+    # a file stream needs an explicit schema
+    reader = spark.readStream.schema(read_parquet(spark, path).schema)
     if max_files_per_trigger:
         reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
     sdf = reader.parquet(path)
     if spread:
         sdf = sdf.repartition(spark.sparkContext.defaultParallelism)
-    # convert nanos-as-long ts columns exactly like the batch loader
-    converted = read_parquet(spark, path)
-    for name, field in zip(converted.schema.fieldNames(), converted.schema.fields):
-        if str(batch.schema[name].dataType) != str(field.dataType):
-            sdf = sdf.withColumn(name, F.timestamp_micros(F.expr(f"`{name}` div 1000")))
     return sdf
 
 
@@ -137,25 +130,23 @@ def run_to_memory(
 
 import contextlib
 
+# replay_shuffle_partitions: source bytes per partition, and the clamp
+REPLAY_PARTITION_BYTES = 256 << 10
+REPLAY_PARTITIONS_MIN = 2
+REPLAY_PARTITIONS_MAX = 32
 
-def replay_shuffle_partitions(
-    path: str,
-    per_partition_bytes: int = 256 << 10,
-    lo: int = 2,
-    hi: int = 32,
-) -> int:
+
+def replay_shuffle_partitions(path: str) -> int:
     """Size-derived shuffle/state-partition count for a replay stream.
 
     Stateful operators create one state store per shuffle partition per
     operator, and every micro-batch pays a per-store commit cost — at
     replay scale (KB..MB of source parquet) that fixed cost dominates,
     while at cluster scale the count must grow with state size.  Derive
-    it from the source size, clamped to [lo, hi]; the 256 KiB/partition
-    default reproduces the empirically tuned points (2 stores at sf0.01,
-    8 at sf0.1 — a 3.7x win over the session-wide 32 on a stream-stream
-    join).  On a 1000-executor cluster callers pass a larger `hi` (or
-    skip the scope entirely and inherit the session default sized for
-    the cluster).
+    it from the source size, clamped to [2, 32]; 256 KiB/partition
+    reproduces the empirically tuned points (2 stores at sf0.01, 8 at
+    sf0.1 — a 3.7x win over the session-wide 32 on a stream-stream
+    join).
     """
     p = path[:-2] if path.endswith("/*") else path
     if os.path.isfile(p):
@@ -167,8 +158,9 @@ def replay_shuffle_partitions(
                 if not f.startswith((".", "_")):
                     total += os.path.getsize(os.path.join(root, f))
     else:
-        return hi
-    return max(lo, min(hi, (total + per_partition_bytes - 1) // per_partition_bytes))
+        return REPLAY_PARTITIONS_MAX
+    n = (total + REPLAY_PARTITION_BYTES - 1) // REPLAY_PARTITION_BYTES
+    return max(REPLAY_PARTITIONS_MIN, min(REPLAY_PARTITIONS_MAX, n))
 
 
 @contextlib.contextmanager

@@ -30,18 +30,11 @@ TABLE_NAMES = (
 
 
 def read_parquet(spark: SparkSession, path: str) -> DataFrame:
-    """Parquet read that tolerates TIMESTAMP(NANOS) columns.
-
-    Spark has no nanosecond timestamp type and refuses TIMESTAMP(NANOS)
-    parquet columns outright (PARQUET_TYPE_ILLEGAL).  We read nanos as
-    raw int64 (``nanosAsLong``) and convert to TimestampType at
-    microsecond precision — a metadata-only footer inspection decides
-    which columns need it, so non-nanos tables pay nothing.
-    """
-    import pyarrow.parquet as pq
-    from pyspark.sql import functions as F
-
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+    """``spark.read.parquet`` under the two session confs the registry
+    needs, pinned here because the caller may have built a plain
+    session.  Spark has no nanosecond timestamp type: a TIMESTAMP(NANOS)
+    column fails with PARQUET_TYPE_ILLEGAL (every testdata footer is
+    ``timestamp[us]``)."""
     # calendar functions (year/date_trunc/date_format) render instants in
     # the session TZ; the DuckDB oracle is TZ-naive — pin UTC so results
     # agree no matter what session the caller built.
@@ -51,31 +44,7 @@ def read_parquet(spark: SparkSession, path: str) -> DataFrame:
     # window, watermark) reject NTZ, and under the UTC session the
     # instant's wall value equals the oracle's naive value.
     spark.conf.set("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
-    one_file = path
-    if os.path.isdir(path):
-        parts = [p for p in os.listdir(path) if p.endswith(".parquet")]
-        if parts:
-            one_file = os.path.join(path, parts[0])
-    nanos_cols = []
-    try:
-        schema = pq.read_schema(one_file)
-        nanos_cols = [
-            f.name
-            for f in schema
-            if str(f.type) == "timestamp[ns]"
-        ]
-    except Exception:  # noqa: BLE001 - fall back to raw read
-        pass
-    from pyspark.sql.types import LongType
-
-    df = spark.read.parquet(path)
-    for c in nanos_cols:
-        # guard: Spark-written INT96 timestamps also probe as
-        # timestamp[ns] in pyarrow but Spark reads them as TIMESTAMP
-        # already — only convert what actually came back as raw int64
-        if isinstance(df.schema[c].dataType, LongType):
-            df = df.withColumn(c, F.timestamp_micros(F.expr(f"`{c}` div 1000")))
-    return df
+    return spark.read.parquet(path)
 
 
 def spread(df: DataFrame) -> DataFrame:
